@@ -38,22 +38,6 @@ object CoreQueries {
   private def dsum(c: Column, p: Int = 25, s: Int = 6): Column =
     graft.functions.native.fixed_point_sum(c.cast(DoubleType), s)
 
-  /** PipelineQueries.spread's twin for the q-gates (round-14, guide
-    * §2.5): the fixture's lineitem parquet is ONE row group, so a
-    * compute-dense aggregation's partial phase (the exact-percentile
-    * value-counts map, ~1.5 s of q27's 2 s) serializes on a single
-    * scan task. No-op when the scan already carries
-    * ≥ defaultParallelism partitions (any real-scale input). Same
-    * SCAN-ONLY input contract as PipelineQueries.spread (the
-    * partition probe must come off the file-split layout, not a job);
-    * consumers are partition-invariant exact aggregates, so results
-    * are unchanged. */
-  private def spread(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < par) df.repartition(par) else df
-  }
-
   private def davg(c: Column, p: Int = 25, s: Int = 6): Column =
     graft.functions.native.fixed_point_sum(c.cast(DoubleType), s) /
       count(lit(1))
@@ -490,7 +474,7 @@ object CoreQueries {
     // interpolation arithmetic, so the doubles are bit-equal and one
     // of the two big buffers (build + serialize + merge) disappears.
     "q27_percentile" -> ((s, dir) =>
-      spread(t(s, dir, "lineitem")
+      Tables.spread(t(s, dir, "lineitem")
         .select(col("l_returnflag"), col("l_quantity"),
           col("l_extendedprice")))
         .groupBy(col("l_returnflag"))
@@ -680,7 +664,7 @@ object CoreQueries {
     // ~100× the bound), so the summary-merge order cannot reach the
     // verified output.
     "q35_approx_percentile" -> ((s, dir) =>
-      spread(t(s, dir, "lineitem")
+      Tables.spread(t(s, dir, "lineitem")
         .select(col("l_returnflag"), col("l_extendedprice")))
         .groupBy(col("l_returnflag"))
         .agg(expr("percentile(l_extendedprice, 0.5)").as("exact_med"),

@@ -67,6 +67,6 @@ object IvfIndex {
       }
       val cents = centroidCache.computeIfAbsent(path,
         p => VectorOps.loadIvfPqIndex(spark, p).centroids)
-      VectorOps.IvfPqIndex(cents, spark.read.parquet(s"$path/lists"))
+      VectorOps.IvfPqIndex(cents, Tables.parquet(spark, s"$path/lists"))
     }
 }

@@ -21,27 +21,6 @@ object PipelineQueries {
   private def embs(s: SparkSession, dir: String): DataFrame =
     Tables.table(s, dir, "embeddings")
 
-  /** Spread a SMALL scan across the cluster before a compute-dense
-    * per-row stage (round-13, guide §2.5): a fixture-sized corpus is
-    * one parquet split, so regex/decode-heavy projections serialize on
-    * a single task while the rest of the machine idles. No-op when the
-    * scan already carries >= defaultParallelism partitions (any
-    * real-scale input) — nothing extra shuffles at 100 TB. Partition
-    * count comes from the file-split layout (no job); round-robin
-    * repartition is deterministic (sort-before-repartition) and the
-    * consumers are per-row + ordered, so results are unchanged.
-    *
-    * CONTRACT (round-14, ADVICE r13): pass SCAN-ONLY inputs. The
-    * probe reads `df.rdd.getNumPartitions`, which for a plan holding
-    * exchanges under AQE would EXECUTE the upstream stages (real jobs)
-    * just to count partitions — free only because every caller hands
-    * it a bare parquet scan, where the count comes straight off the
-    * file-split layout. */
-  private def spread(df: DataFrame): DataFrame = {
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < par) df.repartition(par) else df
-  }
-
   /** Source universe of a fixture's documents table, discovered once
     * per (dir) and reused — in a real mixing pipeline the source list
     * is configuration, not something every audit re-derives. */
@@ -1462,7 +1441,7 @@ object PipelineQueries {
         lit(" from 10."), (col("doc_id") % 256).cast("string"), lit(".0.1"))
       // three regex scans + a 4-pattern redaction per row: the suite's
       // most regex-dense projection — spread the one-split scan first
-      spread(docs(s, dir)).select(col("doc_id"), piiText.as("pii"))
+      Tables.spread(docs(s, dir)).select(col("doc_id"), piiText.as("pii"))
         .select(col("doc_id"),
           TextOps.piiCount(col("pii"), TextOps.EmailPattern).as("n_email"),
           TextOps.piiCount(col("pii"), TextOps.PhonePattern).as("n_phone"),

@@ -176,10 +176,10 @@ object VectorOps {
 
   def loadIvfPqIndex(
       spark: org.apache.spark.sql.SparkSession, path: String): IvfPqIndex = {
-    val cents = spark.read.parquet(s"$path/centroids")
+    val cents = graft.Tables.parquet(spark, s"$path/centroids")
       .orderBy(col("cid")).collect()
       .map(_.getSeq[Double](1).toSeq).toSeq
-    IvfPqIndex(cents, spark.read.parquet(s"$path/lists"))
+    IvfPqIndex(cents, graft.Tables.parquet(spark, s"$path/lists"))
   }
 
   /** Probe-only IVF-PQ top-k against a prebuilt index — the daily-

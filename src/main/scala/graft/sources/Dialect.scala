@@ -223,6 +223,10 @@ trait Dialect extends Serializable {
     }
   }
 
+  /** DDL type for a column that must accept every value a column of
+    * remote type `t` holds — the staged write's staging columns. */
+  def columnDdlType(t: RemoteType): String = ddlType(t.toSpark)
+
   /** COUNT(1) including pushed filters (reference `connection/mod.rs:454-512`). */
   def countQuery(source: RemoteSource, filters: Seq[String] = Nil): String =
     s"SELECT COUNT(1) FROM ${fromClause(source)}${whereClause(filters)}"
@@ -238,6 +242,9 @@ trait Dialect extends Serializable {
 
   def binaryLiteral(b: Array[Byte]): String =
     "X'" + b.map("%02X".format(_)).mkString + "'"
+
+  /** Binary literal stored into a column of remote type `t`. */
+  def binaryLiteral(b: Array[Byte], t: RemoteType): String = binaryLiteral(b)
 
   def dateLiteral(d: LocalDate): String = s"DATE '$d'"
 
@@ -419,6 +426,21 @@ object DerbyDialect extends Dialect {
     * to store into BLOB columns without an explicit cast. */
   override def binaryLiteral(b: Array[Byte]): String =
     "CAST(X'" + b.map("%02x".format(_)).mkString + "' AS BLOB)"
+  /** Derby keeps bit strings (`CHAR/VARCHAR .. FOR BIT DATA`) and
+    * BLOBs apart: neither may be assigned to the other (SQLSTATE
+    * 42821). So a bit-string column takes the bare literal, and a
+    * staging column keeps its target's bit-string type. */
+  override def binaryLiteral(b: Array[Byte], t: RemoteType): String = t match {
+    case RemoteType.RFixedBinary(_) | RemoteType.RVarBinary(_) =>
+      super.binaryLiteral(b)
+    case _ => binaryLiteral(b)
+  }
+  override def columnDdlType(t: RemoteType): String = t match {
+    case RemoteType.RFixedBinary(n) => s"CHAR($n) FOR BIT DATA"
+    case RemoteType.RVarBinary(n) if n <= 32672 => s"VARCHAR($n) FOR BIT DATA"
+    case RemoteType.RVarBinary(_) => "LONG VARCHAR FOR BIT DATA"
+    case _ => super.columnDdlType(t)
+  }
   /** Derby spells character length LENGTH and substring SUBSTR. */
   override def scalarFn(fn: String, args: Seq[String]): Option[String] =
     fn match {
@@ -482,7 +504,8 @@ object DerbyDialect extends Dialect {
         val scale = Option(s).map(_.toInt).getOrElse(0)
         val t = (name.trim, Option(bit).isDefined) match {
           case ("CHAR", true) => RFixedBinary(math.max(prec, 1))
-          case ("VARCHAR", true) | ("LONG VARCHAR", true) => RBinary
+          case ("VARCHAR", true) => RVarBinary(math.max(prec, 1))
+          case ("LONG VARCHAR", true) => RVarBinary(32700)
           case ("BOOLEAN", _) => RBool
           case ("SMALLINT", _) => RInt2
           case ("INTEGER", _) | ("INT", _) => RInt4

@@ -335,7 +335,8 @@ object Jdbc {
       case Types.LONGVARCHAR | Types.LONGNVARCHAR | Types.CLOB | Types.NCLOB
            | Types.SQLXML => RText
       case Types.BINARY => RFixedBinary(math.max(precision, 1))
-      case Types.VARBINARY | Types.LONGVARBINARY | Types.BLOB => RBinary
+      case Types.VARBINARY | Types.LONGVARBINARY => RVarBinary(math.max(precision, 1))
+      case Types.BLOB => RBinary
       case Types.DATE => RDate
       case Types.TIME | Types.TIME_WITH_TIMEZONE => RTime
       case Types.TIMESTAMP => RTimestampNtz
@@ -490,7 +491,7 @@ object Jdbc {
         case v => Decimal(BigDecimal(v.toString).setScale(s,
           BigDecimal.RoundingMode.HALF_UP), p, s)
       }
-      case RBinary | RFixedBinary(_) => v => v.asInstanceOf[Array[Byte]]
+      case RBinary | RFixedBinary(_) | RVarBinary(_) => v => v.asInstanceOf[Array[Byte]]
       case RDate => { case d: java.sql.Date => DateTimeUtils.fromJavaDate(d)
                       case d: java.time.LocalDate => DateTimeUtils.localDateToDays(d)
                       case v => bad(v) }
@@ -580,7 +581,7 @@ object Jdbc {
         val v = rs.getString(i)
         if (v == null) null else UTF8String.fromString(v)
       }
-      case RBinary | RFixedBinary(_) | RUuid | RGeometry => (rs, i) => rs.getBytes(i)
+      case RBinary | RFixedBinary(_) | RVarBinary(_) | RUuid | RGeometry => (rs, i) => rs.getBytes(i)
       case RDate => (rs, i) => {
         val v = rs.getDate(i)
         if (v == null) null else DateTimeUtils.fromJavaDate(v)
@@ -693,7 +694,7 @@ object Jdbc {
         val v = rs.getString(i)
         if (v == null) vec.putNull(row) else putStr(vec, row, v)
       }
-      case RBinary | RFixedBinary(_) | RUuid | RGeometry => (rs, i, vec, row) => {
+      case RBinary | RFixedBinary(_) | RVarBinary(_) | RUuid | RGeometry => (rs, i, vec, row) => {
         val v = rs.getBytes(i)
         if (v == null) vec.putNull(row) else vec.putByteArray(row, v, 0, v.length)
       }
@@ -750,7 +751,7 @@ object Jdbc {
         else BigDecimal(clampDecode(v, f, c.clampedScale).toJavaBigDecimal)
       }
       case RChar(_) | RVarchar(_) | RText | RJson | RXml => (rs, i) => rs.getString(i)
-      case RBinary | RFixedBinary(_) | RUuid | RGeometry => (rs, i) => rs.getBytes(i)
+      case RBinary | RFixedBinary(_) | RVarBinary(_) | RUuid | RGeometry => (rs, i) => rs.getBytes(i)
       case RDate => (rs, i) => rs.getDate(i)
       case RTime => (rs, i) => {
         val v = rs.getTime(i)
@@ -793,7 +794,7 @@ object Jdbc {
           BigDecimal(d.setScale(s, java.math.RoundingMode.HALF_UP))
         case v => BigDecimal(v.toString).setScale(s, BigDecimal.RoundingMode.HALF_UP)
       }
-      case RBinary | RFixedBinary(_) => identity
+      case RBinary | RFixedBinary(_) | RVarBinary(_) => identity
       case RDate => identity
       case _ => v => v.toString
     }

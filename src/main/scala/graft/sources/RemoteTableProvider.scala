@@ -32,6 +32,12 @@ class RemoteTableProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-remote"
   override def supportsExternalMetadata(): Boolean = true
 
+  /** The remote schema [[inferSchema]] probed, with the options it was
+    * probed for. Spark makes a provider per load and calls `getTable`
+    * on it right after `inferSchema`, with the same options; the table
+    * takes this schema instead of probing the remote a second time. */
+  private var inferred: Option[(java.util.Map[String, String], RemoteSchema)] = None
+
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val opts = RemoteOptions(options.asCaseSensitiveMap())
     opts.command match {
@@ -41,6 +47,7 @@ class RemoteTableProvider extends TableProvider with DataSourceRegister {
         s"unknown command '$other' (supported: list_tables, pool_state)")
       case None =>
         val remote = Jdbc.inferSchema(opts)
+        inferred = Some((options.asCaseSensitiveMap(), remote))
         opts.transform.transformSchema(remote.toSpark,
           TransformContext(opts.dialect.name, remote.toSpark, remote))
     }
@@ -49,8 +56,11 @@ class RemoteTableProvider extends TableProvider with DataSourceRegister {
   override def getTable(
       schema: StructType,
       partitioning: Array[PartitionTransform],
-      properties: java.util.Map[String, String]): Table =
-    new RemoteTableImpl(RemoteOptions(properties), Option(schema))
+      properties: java.util.Map[String, String]): Table = {
+    val known = inferred.collect { case (p, r) if p == properties => r }
+    inferred = None
+    new RemoteTableImpl(RemoteOptions(properties), Option(schema), known)
+  }
 }
 
 object RemoteTableImpl {
@@ -81,8 +91,9 @@ class RemoteTableImpl(val opts: RemoteOptions, userSchema: Option[StructType],
   val isCommand: Boolean = opts.command.isDefined
 
   /** Remote (source-native) schema of the raw scan. `knownRemoteSchema`
-    * skips the probe when the caller already derived it (join pushdown
-    * composes it from the two sides' inferred schemas). */
+    * skips the probe when the caller already derived it: the provider's
+    * `inferSchema` probed it for the same load, or join pushdown
+    * composed it from the two sides' inferred schemas. */
   lazy val remoteSchema: RemoteSchema = knownRemoteSchema.getOrElse {
     opts.command match {
       case Some("pool_state") =>
@@ -302,13 +313,6 @@ class RemoteScanBuilder(private var table: RemoteTableImpl)
     }
     pushedPreds = compiled.collect { case (p, Some(_)) => p }.toArray
     pushedSql = compiled.collect { case (_, Some(s)) => s }
-    if (sys.env.contains("GRAFT_DEBUG_PUSH"))
-      compiled.foreach { case (p, s) =>
-        // scalastyle:off println
-        println(s"GRAFT_PUSH: $p -> $s v1=${
-          org.apache.spark.sql.graftbridge.Bridge.predicateToV1(p)}")
-        // scalastyle:on println
-      }
     compiled.collect { case (p, None) => p }.toArray
   }
   override def pushedPredicates(): Array[
@@ -515,16 +519,7 @@ class RemoteScanBuilder(private var table: RemoteTableImpl)
       }
     }
 
-  private def debugAgg(aggregation: Aggregation): Unit =
-    if (sys.env.contains("GRAFT_DEBUG_PUSH")) {
-      // scalastyle:off println
-      aggregation.aggregateExpressions.foreach(a =>
-        println(s"GRAFT_AGG: $a (${a.getClass.getName}) -> ${compileAgg(a)}"))
-      // scalastyle:on println
-    }
-
   override def supportCompletePushDown(aggregation: Aggregation): Boolean = {
-    debugAgg(aggregation)
     // single-partition scans only: complete pushdown means Spark takes
     // our rows as the final aggregate result (with GROUP BY, one remote
     // result row per group — the remote engine's grouping IS the final

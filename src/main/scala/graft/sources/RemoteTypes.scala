@@ -65,6 +65,10 @@ object RemoteType {
   case object RText extends RemoteType { val toSpark = StringType; val typeName = "TEXT" }
   case object RBinary extends RemoteType { val toSpark = BinaryType; val typeName = "BINARY" }
   final case class RFixedBinary(length: Int) extends RemoteType { val toSpark = BinaryType; val typeName = s"BINARY($length)" }
+  /** Bounded bit string (JDBC VARBINARY/LONGVARBINARY, Derby
+    * `VARCHAR(n) FOR BIT DATA`). Reads like [[RBinary]]; the writer
+    * keeps it apart because Derby refuses to assign a BLOB to it. */
+  final case class RVarBinary(length: Int) extends RemoteType { val toSpark = BinaryType; val typeName = s"VARBINARY($length)" }
   case object RDate extends RemoteType { val toSpark = DateType; val typeName = "DATE" }
   /** Time-of-day: no Spark type; convention = microseconds since midnight. */
   case object RTime extends RemoteType { val toSpark = LongType; val typeName = "TIME" }

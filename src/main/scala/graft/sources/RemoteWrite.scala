@@ -191,7 +191,7 @@ class StagedRemoteBatchWrite(
   // driver-side staging DDL, before any task launches
   locally {
     val cols = writeFields.map(f =>
-      s"${dialect.quote(f.name)} ${dialect.ddlType(f.tpe.toSpark)}")
+      s"${dialect.quote(f.name)} ${dialect.columnDdlType(f.tpe)}")
     withConn { st =>
       st.executeUpdate(
         s"CREATE TABLE ${dialect.tableName(stagingParts)} (${cols.mkString(", ")})")
@@ -496,8 +496,8 @@ trait Literalizer extends Serializable {
     v.toPlainString
   def stringLiteral(v: String, dialect: Dialect): String =
     dialect.stringLiteral(v)
-  def binaryLiteral(v: Array[Byte], dialect: Dialect): String =
-    dialect.binaryLiteral(v)
+  def binaryLiteral(v: Array[Byte], field: RemoteField, dialect: Dialect): String =
+    dialect.binaryLiteral(v, field.tpe)
   def dateLiteral(days: Int, dialect: Dialect): String =
     // pure java.time: identical wall date to the java.sql.Date round
     // trip (the Julian rebase exists to preserve the displayed date),
@@ -561,7 +561,7 @@ trait Literalizer extends Serializable {
       case BinaryType => field.tpe match {
         case RemoteType.RUuid => uuidLiteral(v.asInstanceOf[Array[Byte]], dialect)
         case RemoteType.RGeometry => geometryLiteral(v.asInstanceOf[Array[Byte]], dialect)
-        case _ => binaryLiteral(v.asInstanceOf[Array[Byte]], dialect)
+        case _ => binaryLiteral(v.asInstanceOf[Array[Byte]], field, dialect)
       }
       case DateType => dateLiteral(v.asInstanceOf[Int], dialect)
       case TimestampType => timestampLiteral(v.asInstanceOf[Long], ntz = false, dialect)

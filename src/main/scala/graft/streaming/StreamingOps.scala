@@ -41,7 +41,7 @@ object StreamingOps {
     * which watermarks reject — same handling as [[graft.Tables]]). */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val batchSchema = spark.read.parquet(s"$dir/events.parquet").schema
+    val batchSchema = graft.Tables.footerSchema(spark, s"$dir/events.parquet")
     // the file stream source wants a DIRECTORY; filter to the one table
     val raw = spark.readStream.schema(batchSchema)
       .option("pathGlobFilter", "events.parquet")

@@ -50,7 +50,7 @@ class CatalogInferenceSpec extends AnyFunSuite {
     assert(p("VARCHAR(64)") == (RVarchar(64), true))
     assert(p("DECIMAL(10,2)") == (RDecimal(10, 2), true))
     assert(p("CHAR (8) FOR BIT DATA") == (RFixedBinary(8), true))
-    assert(p("VARCHAR (32) FOR BIT DATA") == (RBinary, true))
+    assert(p("VARCHAR (32) FOR BIT DATA") == (RVarBinary(32), true))
     assert(p("LONG VARCHAR") == (RText, true))
     assert(p("CLOB(2147483647)") == (RText, true))
     assert(p("BLOB(2147483647)") == (RBinary, true))

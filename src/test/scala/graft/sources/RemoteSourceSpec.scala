@@ -661,6 +661,17 @@ class RemoteSourceSpec extends AnyFunSuite {
     assert(opened == closed, s"opened=$opened closed=$closed")
   }
 
+  test("a filtered single-table read probes the remote schema once") {
+    // one borrow for the schema probe at load, one for the reader: the
+    // table reuses the schema the load inferred instead of probing again
+    val before = GraftConnections.opened.get
+    val rows = remote("dbtable" -> "NATION")
+      .filter(col("N_REGIONKEY") === 0).collect()
+    assert(rows.nonEmpty)
+    val borrows = GraftConnections.opened.get - before
+    assert(borrows == 2, s"expected 2 connection borrows, saw $borrows")
+  }
+
   test("dialect SQL generation matches reference rewrite shapes") {
     val d = PostgresDialect
     val t = RemoteSource.TableRef(Seq("public", "t"))
