@@ -30,6 +30,9 @@ object SparkEntry {
     // round-14) — measured HARMFUL to the screens, so it must never
     // leak past the query that set it
     spark.conf.unset("spark.sql.adaptive.coalescePartitions.minPartitionSize")
+    // reading events sets this (Tables.table, StreamingOps.eventsStream);
+    // left set, later parquet reads type TIMESTAMP(NANOS) as raw longs
+    spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
     // queries that persist an iteration-reused input (p11 caches its
     // k-means corpus) must not leak that cache into other queries'
     // timings or scans

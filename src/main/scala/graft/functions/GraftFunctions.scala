@@ -109,7 +109,8 @@ object GraftFunctions {
 }
 
 /** `spark.sql.extensions` entry point: native SQL functions plus the
-  * graft optimizer rules (range-join auto-rewrite). */
+  * graft plan rules (range-join auto-rewrite, the top-k-per-key
+  * strategy and the single-partition tail under AQE). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     GraftFunctions.builders.foreach { case (name, builder) =>
@@ -118,5 +119,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
     e.injectOptimizerRule(_ => new graft.plans.RangeJoinRewrite)
     e.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
+    e.injectRuntimeOptimizerRule(new graft.plans.SinglePartitionTail(_))
   }
 }

@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,6 +21,33 @@ object SparkTestSession {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Jobs that `f` starts from this thread. A marker job runs after
+    * it; listener events arrive in order, so once the marker's start
+    * is seen, every job `f` started has been seen too. */
+  def jobsStartedBy(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val key = "graft.spec.jobToken"
+    val token = s"run-${System.nanoTime()}"
+    val starts = new LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key)))
+          .foreach(starts.put)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, token)
+      try f finally sc.setLocalProperty(key, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      Iterator.continually(starts.poll(60, TimeUnit.SECONDS))
+        .map(t => { assert(t != null, "marker job start never arrived"); t })
+        .takeWhile(_ != "marker").count(_ == token)
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
   }
 }
 

@@ -1,9 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Path}
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,33 +11,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class TablesSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
   private lazy val spark = SparkTestSession.spark
-
-  /** Jobs that `f` starts from this thread. A marker job runs after
-    * it; listener events arrive in order, so once the marker's start
-    * is seen, every job `f` started has been seen too. */
-  private def jobsStartedBy(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val key = "graft.tablesSpec.token"
-    val token = s"read-${System.nanoTime()}"
-    val starts = new LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(key)))
-          .foreach(starts.put)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(key, token)
-      try f finally sc.setLocalProperty(key, "marker")
-      sc.parallelize(Seq(1), 1).count()
-      Iterator.continually(starts.poll(60, TimeUnit.SECONDS))
-        .map(t => { assert(t != null, "marker job start never arrived"); t })
-        .takeWhile(_ != "marker").count(_ == token)
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(listener)
-    }
-  }
 
   private def sortedRows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
@@ -65,7 +36,7 @@ class TablesSpec extends AnyFunSuite {
   test("every fixture table reads with no job, the inferred schema and the same rows") {
     Tables.names.foreach { n =>
       var df: DataFrame = null
-      val jobs = jobsStartedBy { df = Tables.table(spark, sf, n) }
+      val jobs = SparkTestSession.jobsStartedBy { df = Tables.table(spark, sf, n) }
       assert(jobs == 0, s"$n: Tables.table started $jobs job(s)")
       // events reads with nanosAsLong set (Tables.table sets it)
       val path = s"$sf/$n.parquet"
@@ -74,6 +45,14 @@ class TablesSpec extends AnyFunSuite {
       if (n != "events")
         assert(df.schema == spark.read.parquet(path).schema, n)
     }
+  }
+
+  test("resetSessionConfs restores the nanosAsLong conf that reading events sets") {
+    val entry = org.apache.spark.sql.internal.SQLConf.LEGACY_PARQUET_NANOS_AS_LONG
+    Tables.table(spark, sf, "events")
+    assert(spark.conf.get(entry.key) == "true")
+    SparkEntry.resetSessionConfs(spark)
+    assert(spark.conf.get(entry.key) == entry.defaultValueString)
   }
 
   test("a Spark-written multi-part directory reads with no job and the same rows") {
@@ -86,7 +65,7 @@ class TablesSpec extends AnyFunSuite {
       val parts = new java.io.File(path).listFiles()
         .count(_.getName.endsWith(".parquet"))
       assert(parts == 4)
-      val jobs = jobsStartedBy { Tables.parquet(spark, path) }
+      val jobs = SparkTestSession.jobsStartedBy { Tables.parquet(spark, path) }
       assert(jobs == 0, s"Tables.parquet started $jobs job(s)")
       assertSameAsInference(path)
     }
