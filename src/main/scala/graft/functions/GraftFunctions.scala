@@ -110,7 +110,8 @@ object GraftFunctions {
 
 /** `spark.sql.extensions` entry point: native SQL functions plus the
   * graft plan rules (range-join auto-rewrite, the top-k-per-key
-  * strategy and the single-partition tail under AQE). */
+  * strategy, and under AQE one-partition inputs and the single-partition
+  * tail). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     GraftFunctions.builders.foreach { case (name, builder) =>
@@ -119,6 +120,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
     e.injectOptimizerRule(_ => new graft.plans.RangeJoinRewrite)
     e.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
+    e.injectPreCBORule(_ => new graft.plans.OnePartitionInputs)
     e.injectRuntimeOptimizerRule(new graft.plans.SinglePartitionTail(_))
   }
 }

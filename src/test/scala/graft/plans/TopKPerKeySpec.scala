@@ -4,10 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestSession
-
-class TopKPerKeySpec extends AnyFunSuite {
-  private lazy val spark = SparkTestSession.spark
+class TopKPerKeySpec extends AnyFunSuite with PlanRuns {
   import spark.implicits._
 
   private lazy val df = (1L to 1000L)
@@ -40,6 +37,14 @@ class TopKPerKeySpec extends AnyFunSuite {
     assert(plan.contains("Exchange hashpartitioning"), plan)
     assert(!plan.contains("Window"), s"window op leaked into plan:\n$plan")
     assert(!plan.contains("Sort "), s"full sort leaked into plan:\n$plan")
+  }
+
+  test("input already clustered on the keys keeps its one exchange") {
+    val clustered = df.repartition(4, col("key"))
+    val r = run(TopK.perKey(clustered, Seq(col("key")), Seq(col("score").desc, col("id")), 5)
+      .select("id", "key", "score"))
+    assert(r.exchanges == 1, r.plan.treeString)
+    assert(r.rows.toSet == windowTopK(5).select("id", "key", "score").collect().toSet)
   }
 
   test("k larger than any group degenerates to the full input") {
