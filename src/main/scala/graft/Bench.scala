@@ -447,9 +447,6 @@ object Bench {
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
         "true")
       .config("spark.sql.session.timeZone", "UTC")
-      // Spark's default of 100 cached generated classes is fewer than a
-      // mix of gates uses; past it every run compiles its classes anew
-      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
 import org.apache.spark.sql.catalyst.optimizer.JoinSelectionHelper
 import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -94,8 +95,13 @@ class SinglePartitionTail(session: SparkSession) extends Rule[LogicalPlan] {
   * The rule fires only when AQE and its partition coalescing are on,
   * the plan is a batch plan with no repartition (the user asked for a
   * layout) and only deterministic expressions, some node in it needs a
-  * distribution, and every leaf is a file scan or a `Range`, with their
-  * summed `sizeInBytes` at most one coalesced partition. It then puts
+  * distribution, and every leaf is a file scan, with their summed
+  * `sizeInBytes` at most one coalesced partition. The input size bounds
+  * the one task's work only while no node can multiply rows, so the
+  * rule also leaves alone plans with a generator, an `Expand` (grouping
+  * sets) or a join without equi keys, and plans with a subquery
+  * expression, whose plan is no leaf here and is later turned into a
+  * join with an input the size test never saw. It then puts
   * `Repartition(1, shuffle = false)` above each leaf's maximal chain of
   * projects and filters, which stays below so that the file scan still
   * prunes columns and pushes filters. `SinglePartition` satisfies every
@@ -110,16 +116,21 @@ class OnePartitionInputs extends Rule[LogicalPlan] with JoinSelectionHelper {
 
   private def fires(plan: LogicalPlan): Boolean =
     conf.adaptiveExecutionEnabled && conf.coalesceShufflePartitionsEnabled && !plan.isStreaming &&
-      plan.find(p => p.isInstanceOf[RepartitionOperation] ||
-        p.expressions.exists(!_.deterministic)).isEmpty &&
+      plan.find(p => p.isInstanceOf[RepartitionOperation] || multipliesRows(p) ||
+        p.expressions.exists(e => !e.deterministic || SubqueryExpression.hasSubquery(e))).isEmpty &&
       plan.exists(OnePartition.needsDistribution) && {
         val leaves = plan.collectLeaves()
         leaves.forall(isInput) && leaves.map(_.stats.sizeInBytes).sum <= OnePartition.bytes(conf, None)
       }
 
+  private def multipliesRows(p: LogicalPlan): Boolean = p match {
+    case _: Generate | _: Expand => true
+    case j: Join => ExtractEquiJoinKeys.unapply(j).isEmpty
+    case _ => false
+  }
+
   private def isInput(p: LogicalPlan): Boolean = p match {
     case l: LogicalRelation => l.relation.isInstanceOf[HadoopFsRelation]
-    case _: Range => true
     case _ => false
   }
 
@@ -131,7 +142,7 @@ class OnePartitionInputs extends Rule[LogicalPlan] with JoinSelectionHelper {
 
   private def coalesceInputs(p: LogicalPlan): LogicalPlan = p match {
     case _ if readsOneInput(p) => Repartition(1, shuffle = false, p)
-    case j: Join if j.hint == JoinHint.NONE && ExtractEquiJoinKeys.unapply(j).isDefined =>
+    case j: Join if j.hint == JoinHint.NONE =>
       withHashJoinHint(j).mapChildren(coalesceInputs)
     case _ => p.mapChildren(coalesceInputs)
   }

@@ -109,6 +109,36 @@ class OnePartitionInputsSpec extends AnyFunSuite with PlanRuns with BeforeAndAft
     }
   }
 
+  test("an EXISTS or IN subquery over an input above one partition leaves the plan unchanged") {
+    items.createOrReplaceTempView("one_partition_items")
+    flags.createOrReplaceTempView("one_partition_flags")
+    // the floor fits the small outer input, not the subquery's input
+    try withConfs(minPartitionSizeKey -> dataFiles(flagsPath).map(_.length).sum.toString) {
+      assertUnchanged(spark.sql("""SELECT flag, name FROM one_partition_flags f WHERE EXISTS
+        (SELECT 1 FROM one_partition_items i WHERE i.flag = f.flag AND i.qty < 40) ORDER BY flag"""))
+      assertUnchanged(spark.sql("""SELECT flag, name FROM one_partition_flags WHERE flag IN
+        (SELECT flag FROM one_partition_items WHERE qty < 40) ORDER BY flag"""))
+    } finally {
+      spark.catalog.dropTempView("one_partition_items")
+      spark.catalog.dropTempView("one_partition_flags")
+    }
+  }
+
+  test("a generator, a grouping set or a join without equi keys leaves the plan unchanged") {
+    atDefaultFloor {
+      assertUnchanged(items.select(col("flag"), explode(array(col("qty"), col("qty") + 1)).as("q"))
+        .groupBy("flag").agg(sum("q").as("q")).orderBy("flag"))
+      assertUnchanged(items.rollup("flag", "status").agg(sum("qty").as("qty")).orderBy("flag", "status"))
+      assertUnchanged(items.join(flags.withColumnRenamed("flag", "f"), col("flag") < col("f"))
+        .groupBy("name").count().orderBy("name"))
+    }
+  }
+
+  test("a range input leaves the plan unchanged") {
+    atDefaultFloor(assertUnchanged(spark.range(0, 6000, 1, 4).selectExpr("id % 3 AS k")
+      .groupBy("k").count().orderBy("k")))
+  }
+
   test("a nondeterministic column leaves the plan unchanged") {
     atDefaultFloor(assertUnchanged(items.select(col("flag"), (rand(7) < 0.5).as("heads"))
       .groupBy("flag", "heads").count().orderBy("flag", "heads")))

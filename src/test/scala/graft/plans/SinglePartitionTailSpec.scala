@@ -9,10 +9,11 @@ import graft.SparkEntry
 /** A query's tail above a finished shuffle stage smaller than one AQE
   * partition runs as one task, with no exchange above that stage.
   *
-  * These inputs are small enough for [[OnePartitionInputs]] to read in
-  * one partition before any stage exists, so the cases run with that
-  * rule excluded. They also pin Spark's default 1 MB partition floor,
-  * which other specs may have lowered in the shared session. */
+  * q01's fixture input is small enough for [[OnePartitionInputs]] to
+  * read in one partition before any stage exists, so every case runs
+  * with that rule excluded and tests this rule alone. The cases also
+  * pin Spark's default 1 MB partition floor, which other specs may have
+  * lowered in the shared session. */
 class SinglePartitionTailSpec extends AnyFunSuite with PlanRuns {
   private val ruleName = classOf[SinglePartitionTail].getName
 
