@@ -178,7 +178,7 @@ object Bench {
     * count and ELIMINATE it: a left join on unique aggregate keys
     * preserves cardinality, so p36/p42/q14/p79-shaped tails collapsed
     * to a bare corpus count — those gates' recorded numbers measured a
-    * parquet count, not the operator (found by the round-10 TuneP79
+    * parquet count, not the operator (found by a round-10
     * stage-listener audit: p79's "count" ran 3 trivial stages while
     * the same operator computed bare took 4.4 s). `toRdd.count()`
     * executes the DataFrame's own physical plan — every projection,

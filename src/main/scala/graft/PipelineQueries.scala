@@ -542,7 +542,7 @@ object PipelineQueries {
     // DEEP BPE training (p88, round 12): 3x p81's merge depth through
     // the lineage-cut generation loop (Bridge.cutLineageCached) — the
     // gate-level proof that depth scaling is exact, not just
-    // TuneBpe-measured; the oracle unrolls all 24 stages.
+    // probe-measured; the oracle unrolls all 24 stages.
     "p88_bpe_deep" -> ((s, dir) =>
       graft.operators.LmOps.bpeTrain(docs(s, dir), "text", nMerges = 24)
         .orderBy(col("step"))),
@@ -1535,7 +1535,7 @@ object PipelineQueries {
     // (measured: 59/59 pairs at sf0.01), so the output hash-matches the
     // exact brute-force oracle — the LSH path carries the full hard
     // correctness signal, not a rows-only check. Re-tuned round 4
-    // (TuneLsh sweep): 16 tables = recall 0.97, 12 = 0.88 — 24 is the
+    // (probe sweep): 16 tables = recall 0.97, 12 = 0.88 — 24 is the
     // minimum for the exact oracle, and its warm in-process median
     // (0.7s sf0.01 / 2.5s sf0.1) matches the round-2 cost; the 5.2s
     // driver reading was single-shot scheduler noise.

@@ -31,7 +31,19 @@ object LmOps {
     * shuffle. The 2M default is where a 32-core recount stage clearly
     * outweighs the ~70 ms/round floor measured at fixture scale;
     * production corpora (10⁷+ distinct words ⇒ ≥10⁸ recount rows)
-    * sit far above it. */
+    * sit far above it.
+    *
+    * The repo fixtures' documents are word-soup over a 31-word
+    * vocabulary (107 recount rows at any sf), so no fixture crosses
+    * this threshold. The input that does is a synthetic corpus of n
+    * distinct 8-hex-char words, one word per row:
+    * {{{
+    * spark.range(n).select(substring(md5(cast(id as string)), 1, 8))
+    * }}}
+    * Its recount is ≈7n rows, and the 16-char alphabet gives every
+    * merge round real cross-word pair mass. Setting this conf to 1 or
+    * to Long.MaxValue on that corpus runs the two modes on the same
+    * input; their merge tables are equal. */
   val IncrementalRecountRowsConf = "spark.graft.bpe.incremental.minRecountRows"
   val IncrementalRecountRowsDefault = 2000000L
 
@@ -481,7 +493,7 @@ object LmOps {
     // (Bridge.cutLineageCached): without the cut, generation k nests
     // all k prior projections — O(k²) analyzer cost, AQE plan-string
     // OOM near 64 merges, and task-deserialization StackOverflow on
-    // the RDD chain (all found by TuneBpe, round 12 — the deeper form
+    // the RDD chain (all found by a round-12 probe — the deeper form
     // of the nested-HOF ADVICE). `stateRdd` is the cached handle;
     // `prevRdd` the parent's, freed only AFTER the child materializes
     // (iterative-op discipline).
@@ -503,9 +515,9 @@ object LmOps {
     // counts_{k+1}(p) = counts_k(p) + Σ_changed[pairs_new − pairs_old]
     // is the recomputed count exactly, by induction — same longs,
     // same (c desc, l, r) argmax, bit-identical merge table (pinned
-    // by Round11/12 hand-corpus + partition-invariance specs, TuneBpe
-    // seq==batched, and the p81-p88 oracle gates), so the MODE SWITCH
-    // below cannot change any result. Per-round shuffle drops from
+    // by Round11/12 hand-corpus + partition-invariance specs, the
+    // Round12 seq==batched spec, and the p81-p88 oracle gates), so the
+    // MODE SWITCH below cannot change any result. Per-round shuffle drops from
     // Σ|word| exploded rows to |distinct pairs| + |changed explosion|
     // — the Zipf tail where most rounds touch few words is exactly
     // where the recount wasted the most. The table is lineage-cut per
@@ -705,24 +717,18 @@ object LmOps {
     * stopped admission), hence count_start(bridge) ≤ c_conflict. So
     * c_P(step i) ≤ c_conflict < c_i and P cannot win even a lex
     * tiebreak, because ties cannot occur. Sequential's argmax at step
-    * i is exactly admission i. ∎ (TuneBpe had measured the unguarded
+    * i is exactly admission i. ∎ (A probe had measured the unguarded
     * divergence at merge 23 of 64: sequential's (c,o)→co enabled
     * (co,lu) mid-batch; c_(co,lu) ≤ c_conflict, so the trim cuts that
     * round at the boundary and re-ranks next round.) Count ties are
     * common in BPE tails, so the trim costs batch width there — but it
     * removes round 12's second job per round entirely, and the Zipf
-    * head (where batching pays) is mostly strict. TuneBpe confirms
-    * merge-for-merge equality with [[bpeTrain]] at 64/16 and 512/64;
-    * the p86 gate proves it against the SEQUENTIAL oracle every round.
-    *
-    * `exact = false` admits the full non-conflicting prefix with no
-    * trim (round 12's measured ~3× unguarded rate): output is a VALID
-    * greedy-BPE variant but can diverge from sequential order once a
-    * merge-created pair overtakes a stale-ranked admission (first
-    * measured at merge 23 on the fixture); use only where bit-exact
-    * vocabulary reproducibility does not matter. */
+    * head (where batching pays) is mostly strict. An sf0.1 probe
+    * measured merge-for-merge equality with [[bpeTrain]] at 64/16 and
+    * 512/64, Round12OpsSpec pins it at 24/16 and batch=1, and the p86
+    * gate proves it against the SEQUENTIAL oracle every round. */
   def bpeTrainBatched(df: DataFrame, textCol: String, nMerges: Int,
-      batch: Int = 4, exact: Boolean = true): DataFrame = {
+      batch: Int = 4): DataFrame = {
     require(nMerges >= 1 && nMerges <= 65536,
       s"nMerges in [1,65536]: $nMerges")
     require(batch >= 1 && batch <= 256, s"batch in [1,256]: $batch")
@@ -747,7 +753,7 @@ object LmOps {
     // re-exploding the whole word table; identical longs by induction,
     // so the over-collect ranking, the conflict prefix, and the
     // strict-dominance trim see exactly the counts a recount would
-    // produce (TuneBpe pins seq==batched merge-for-merge).
+    // produce (Round12OpsSpec pins seq==batched merge-for-merge).
     var counts: DataFrame = null
     var countsRdd: org.apache.spark.rdd.RDD[_] = null
     var prevCountsRdd: org.apache.spark.rdd.RDD[_] = null
@@ -819,13 +825,8 @@ object LmOps {
         val cConflict =
           if (admitted.size < top.length) top(admitted.size).getLong(2)
           else -1L
-        val keep =
-          if (!exact) admitted.size
-          else {
-            val t = admitted.indexWhere({ case (_, _, c) =>
-              c <= cConflict }, 1)
-            if (t >= 1) t else admitted.size
-          }
+        val t = admitted.indexWhere({ case (_, _, c) => c <= cConflict }, 1)
+        val keep = if (t >= 1) t else admitted.size
         val applied = admitted.take(math.max(keep, 1)).toSeq
         val appliedPairs = applied.map { case (l, r, _) => (l, r) }
         if (incremental) {

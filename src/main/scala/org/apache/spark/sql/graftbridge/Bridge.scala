@@ -46,7 +46,7 @@ object Bridge {
     * invokes `listenerManager.onSuccess` (private[sql]), so observed
     * metrics silently never completed under Bench (round 12 find:
     * m14's skew evidence was reaching stderr only from `.count()`
-    * harnesses like TuneFocus, never from the round artifact). */
+    * probe harnesses, never from the round artifact). */
   def fireObservations(df: org.apache.spark.sql.DataFrame,
       name: String, durationNs: Long): Unit = {
     val qe = df.queryExecution
@@ -65,7 +65,7 @@ object Bridge {
     * grows O(k²) for the analyzer and OOMs AQE's plan-string rendering
     * near 64 generations, and even with the logical plan cut the
     * PHYSICAL RDD chain still deepens until task deserialization
-    * StackOverflows (both found by TuneBpe at 64 merges; a Dataset
+    * StackOverflows (both found by a probe at 64 merges; a Dataset
     * persist truncates neither — it only short-circuits execution).
     *
     * Mechanism: compile the frame once, COPY each InternalRow (toRdd

@@ -30,9 +30,13 @@ import org.apache.spark.sql.functions._
   * shingles reach df ≈ 0.3·N (corpus-hot), so the containment
   * screen's `maxBucket` cap finally BINDS on realistically-shaped
   * data; the default cross-copy-dissimilar fixtures top out at df 25
-  * (TuneScreen round-12 negative result). Documents-only on purpose:
+  * (a round-12 negative result). Documents-only on purpose:
   * the ~57 SCALE.md measurements keep their unchanged sf1/sf10
   * fixtures.
+  *
+  * None of these outputs is tracked in git. The build is deterministic:
+  * `python3 tools/fixture_hash.py <dir>` prints an order-independent
+  * per-table hash, and FIXTURES.md records the expected values.
   */
 object MakeSf1 {
   var copies = 10

@@ -97,21 +97,6 @@ class Round12OpsSpec extends AnyFunSuite {
     val bat1 = LmOps.bpeTrainBatched(docs, "text", nMerges = 4, batch = 1)
       .as[(Int, String, String, Long)].collect().toSeq.sortBy(_._1)
     assert(bat1 == seqT.take(4), s"batch=1:\n${seqT.take(4)}\n$bat1")
-    // exact=false (unguarded): full-prefix admission — a valid greedy
-    // variant that may reorder vs sequential, but batch=1 still
-    // degenerates to sequential and merge COUNT is always honored
-    val raw1 = LmOps.bpeTrainBatched(docs, "text", nMerges = 4,
-        batch = 1, exact = false)
-      .as[(Int, String, String, Long)].collect().toSeq.sortBy(_._1)
-    assert(raw1 == seqT.take(4), s"unguarded batch=1:\n$raw1")
-    val raw = LmOps.bpeTrainBatched(docs, "text", nMerges = 24,
-        batch = 16, exact = false)
-      .as[(Int, String, String, Long)].collect().toSeq.sortBy(_._1)
-    assert(raw.size == 24, s"unguarded returned ${raw.size} merges")
-    // its steps are 1..24 and every merge output is novel (sane table)
-    assert(raw.map(_._1) == (1 to 24), "unguarded step numbering")
-    val outs = raw.map(m => m._2 + m._3)
-    assert(outs.distinct.size == outs.size, "unguarded duplicate merge")
   }
 
   test("BpeApply native expression applies an ordered merge table " +

@@ -10,6 +10,11 @@ class Round14OpsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
+  private def namesFixedPointSum(t: Throwable): Boolean =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(12)
+      .exists(c => c.getMessage != null &&
+        c.getMessage.contains("fixed_point_sum"))
+
   test("reliable checkpoint option (spark.graft.checkpoint.dir) routes " +
       "the iterative operators' lineage cuts to durable files with " +
       "identical results") {
@@ -102,10 +107,20 @@ class Round14OpsSpec extends AnyFunSuite {
       Seq(1e13, 2.0).toDF("v")
         .agg(graft.functions.native.fixed_point_sum(col("v"), 6)).collect()
     }
-    def chain(t: Throwable): Seq[Throwable] =
-      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(12).toSeq
-    assert(chain(e).exists(c => c.getMessage != null &&
-      c.getMessage.contains("fixed_point_sum")), s"got: $e")
+    assert(namesFixedPointSum(e), s"got: $e")
+  }
+
+  test("fixed_point_sum per-row domain at scale 6: |v| < 10^12 sums " +
+      "exactly, and |v| = 10^12 throws rather than returning null") {
+    def fps(vs: Double*) = vs.toDF("v")
+      .agg(graft.functions.native.fixed_point_sum(col("v"), 6)).collect()
+    val edge = 999999999999.0
+    assert(fps(edge).head.getDouble(0) === edge)
+    assert(fps(edge, edge, -0.25).head.getDouble(0) === 1999999999997.75)
+    for (v <- Seq(1e12, -1e12)) {
+      val e = intercept[Exception](fps(v, 2.0))
+      assert(namesFixedPointSum(e), s"$v got: $e")
+    }
   }
 
   test("sorted_pairs_sim emits EXACTLY the sorted_pairs survivors of " +

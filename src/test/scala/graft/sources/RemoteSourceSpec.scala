@@ -622,6 +622,35 @@ class RemoteSourceSpec extends AnyFunSuite {
     assert(n == 2)
   }
 
+  test("enablestatistics: the scan's row count is the exact pushed-filter " +
+      "count, capped by a pushed limit; absent without the option") {
+    def scan(df: org.apache.spark.sql.DataFrame) = {
+      val scans = df.queryExecution.optimizedPlan.collect {
+        case s: org.apache.spark.sql.execution.datasources.v2
+            .DataSourceV2ScanRelation => s
+      }
+      assert(scans.size == 1, df.queryExecution.optimizedPlan.toString)
+      scans.head
+    }
+    def nation(extra: (String, String)*) =
+      remote(("dbtable" -> "NATION") +: extra: _*)
+        .filter(col("N_REGIONKEY") === 1)
+    val filtered = nation("enablestatistics" -> "true")
+    val s = scan(filtered)
+    assert(s.scan.description().contains("PushedFilters: [\"N_REGIONKEY\" = 1]"),
+      s.scan.description())
+    val exact = nation().count()
+    assert(exact == 2)
+    assert(s.stats.rowCount.contains(BigInt(exact)))
+    Seq(1 -> 1L, 100 -> exact).foreach { case (n, rows) =>
+      val limited = scan(filtered.limit(n))
+      assert(limited.scan.description().contains(s"PushedLimit: $n"),
+        limited.scan.description())
+      assert(limited.stats.rowCount.contains(BigInt(rows)), s"limit $n")
+    }
+    assert(scan(nation()).stats.rowCount.isEmpty)
+  }
+
   test("columnar read path is planned (vectorized ColumnarToRow over the scan)") {
     val plan = remote("dbtable" -> "ALL_TYPES")
       .queryExecution.executedPlan.toString
