@@ -38,29 +38,6 @@ import org.apache.spark.sql.functions._
   */
 object ClusterOps {
 
-  /** Round-14: when the label table's exact row count (observed on its
-    * own materialization, zero cost) is at or below this, the CC loop
-    * runs AQE-off with an explicit broadcast hint on the labels side
-    * of the per-round join — one scheduled job per round instead of
-    * one per exchange (~6 under AQE stage materialization), with the
-    * SAME broadcast join shape AQE picks at that size. Above it (a
-    * 100 TB corpus's label table) the loop is unchanged: AQE plans
-    * every round adaptively. 1M (node, comp) rows ≈ tens of MB as a
-    * broadcast relation — comfortably inside executor memory at any
-    * deployment, far above every fixture graph. */
-  val BroadcastNodesConf = "spark.graft.cc.broadcastNodes"
-  val BroadcastNodesDefault = 1000000L
-
-  /** Connected components over an undirected edge list.
-    *
-    * @param edges  DataFrame with two id columns (one row per edge)
-    * @param srcCol / dstCol edge endpoint columns (numeric ids)
-    * @param maxIter hard round cap; throws if not converged (a
-    *                non-converged label set is silently WRONG — at
-    *                scale, raise the cap, don't drop the check)
-    * @return (node, comp) — comp is the smallest node id in the
-    *         component; only nodes that appear in `edges`.
-    */
   /** Eagerly localCheckpoint `df` and return the storage blocks the
     * checkpoint pinned, so the caller can free them the moment the
     * generation is superseded. `Dataset.unpersist` cannot do this (it
@@ -123,6 +100,27 @@ object ClusterOps {
     (out, pinned, s.map(sv => (sv, n.getOrElse(0L))))
   }
 
+  /** Bytes of one (node, comp) label row as an UnsafeRow: an 8-byte
+    * null bitset plus two 8-byte longs. The CC loop's broadcast guard
+    * sizes the label table with it against Spark's own
+    * `spark.sql.autoBroadcastJoinThreshold`. */
+  private val LabelRowBytes = 24L
+
+  /** Connected components over an undirected edge list.
+    *
+    * @param edges  DataFrame with two id columns (one row per edge)
+    * @param srcCol / dstCol edge endpoint columns (numeric ids)
+    * @param maxIter hard round cap; throws if not converged (a
+    *                non-converged label set is silently WRONG — at
+    *                scale, raise the cap, don't drop the check)
+    * @return (node, comp) — comp is the smallest node id in the
+    *         component; only nodes that appear in `edges`.
+    *
+    * When the label table is broadcast-sized, every round is planned
+    * AQE-off with a broadcast hint ([[org.apache.spark.sql.graftbridge
+    * .Bridge.nonAdaptive]]); the caller's session confs are never
+    * changed, so a concurrent query in the same session keeps its own.
+    */
   def connectedComponents(
       edges: DataFrame, srcCol: String, dstCol: String,
       maxIter: Int = 20): DataFrame = {
@@ -156,21 +154,23 @@ object ClusterOps {
     // alone re-plans the sym⋈labels join as sort-merge (the round-13
     // negative result). Fix BOTH at once when the label table is
     // provably broadcast-sized: its exact row count rides the
-    // convergence observation (zero cost), and below the size guard
-    // the loop runs AQE-OFF with an EXPLICIT broadcast hint on the
-    // labels side — one scheduled job per round instead of ~6, same
-    // broadcast join shape AQE picked, bit-identical labels (join
-    // strategy and partitioning cannot change an exact min
-    // aggregation). Above the guard (a 100 TB corpus's label table)
-    // nothing changes. Node count is loop-constant, so the decision
-    // is made once. Same SINGLE-QUERY-AT-A-TIME session-conf
-    // assumption as the BPE loop (documented there); harnesses run
-    // one query at a time and the finally restores the confs.
-    val ccSpark = edges.sparkSession
-    val nodeCount = firstSum.get._2
-    val bcastLabels = nodeCount <= ccSpark.conf
-      .getOption(BroadcastNodesConf).map(_.trim.toLong)
-      .getOrElse(BroadcastNodesDefault)
+    // convergence observation (zero cost), and when those rows fit
+    // Spark's own broadcast threshold (never when it is -1) every
+    // round runs AQE-OFF with an EXPLICIT broadcast hint on the labels
+    // side — one scheduled job per round instead of ~6, same broadcast
+    // join shape AQE picked, bit-identical labels (join strategy and
+    // partitioning cannot change an exact min aggregation). Otherwise
+    // (a 100 TB corpus's label table) AQE plans every round. Node
+    // count is loop-constant, so the decision is made once. The
+    // AQE-off rounds are planned by Bridge.nonAdaptive, which never
+    // writes the caller's session confs; each round's convergence
+    // observation rides the checkpoint job in the caller's session.
+    val threshold = edges.sparkSession.sessionState.conf
+      .autoBroadcastJoinThreshold
+    val bcastLabels =
+      threshold >= 0 && firstSum.get._2 * LabelRowBytes <= threshold
+    val parts = math.max(1, labelBlocks.headOption
+      .map(_.getNumPartitions).getOrElse(1))
     var converged = false
     var iter = 0
     // Round-13 note (negative result, superseded by the guarded form
@@ -180,15 +180,6 @@ object ClusterOps {
     // BROADCAST (LogicalRDD leaves carry no stats ⇒ sort-merge). The
     // explicit hint under the size guard restores exactly the join
     // AQE picked; above the guard AQE stays on unchanged.
-    val prevAqe = ccSpark.conf.getOption("spark.sql.adaptive.enabled")
-    val prevParts = ccSpark.conf.getOption("spark.sql.shuffle.partitions")
-    if (bcastLabels) {
-      val parts = math.max(1, labelBlocks.headOption
-        .map(_.getNumPartitions).getOrElse(1))
-      ccSpark.conf.set("spark.sql.adaptive.enabled", "false")
-      ccSpark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    }
-    try {
     while (!converged && iter < maxIter) {
       // neighbor's label flows across each edge; keep the min of
       // (own label, best neighbor label, own label's label).
@@ -222,9 +213,12 @@ object ClusterOps {
       val labSide = if (bcastLabels) broadcast(labels) else labels
       val viaEdges = sym.join(labSide, sym("src") === labSide("node"))
         .select(sym("dst").as("node"), col("comp"))
+      val round = labels.union(viaEdges)
+        .groupBy("node").agg(min("comp").as("comp"))
       val (next, nextBlocks, sumOpt) = checkpointTrackedSum(
-        labels.union(viaEdges)
-          .groupBy("node").agg(min("comp").as("comp")))
+        if (bcastLabels)
+          org.apache.spark.sql.graftbridge.Bridge.nonAdaptive(round, parts)
+        else round)
       // non-empty from here (guarded above): the union keeps at least
       // the label rows, so a missing metric is a completion-mechanism
       // failure, not an empty frame — fail loudly, never silently
@@ -242,12 +236,6 @@ object ClusterOps {
       labelBlocks = nextBlocks
       labels = next
       iter += 1
-    }
-    } finally {
-      prevAqe.fold(ccSpark.conf.unset("spark.sql.adaptive.enabled"))(v =>
-        ccSpark.conf.set("spark.sql.adaptive.enabled", v))
-      prevParts.fold(ccSpark.conf.unset("spark.sql.shuffle.partitions"))(v =>
-        ccSpark.conf.set("spark.sql.shuffle.partitions", v))
     }
     // the edge set is dead once the fixpoint is reached; the FINAL
     // label generation must stay pinned (the caller's query reads it —

@@ -26,7 +26,7 @@ object LmOps {
     * (Σ over distinct words of |word|−1, measured once from the
     * materialized word cache) exceeds this threshold. Either mode
     * produces bit-identical merge tables (see the proof note in
-    * [[bpeRun]]); the threshold only trades the incremental table's
+    * [[bpeLoop]]); the threshold only trades the incremental table's
     * fixed per-round floor against the recount's data-proportional
     * shuffle. The 2M default is where a 32-core recount stage clearly
     * outweighs the ~70 ms/round floor measured at fixture scale;
@@ -395,14 +395,21 @@ object LmOps {
     * Partition-invariant: counts are exact integers and the tie-break
     * is total. Scale: nMerges jobs over the persisted word table —
     * at 100 TB the word table is ~10⁷ rows (Heaps' law), pennies per
-    * round next to the one corpus-counting shuffle. */
+    * round next to the one corpus-counting shuffle. Rounds 2 onward
+    * are planned AQE-off ([[org.apache.spark.sql.graftbridge.Bridge
+    * .nonAdaptive]]); the caller's session confs are never changed, so
+    * a concurrent query in the same session keeps its own. */
   def bpeTrain(df: DataFrame, textCol: String, nMerges: Int): DataFrame = {
-    val (table, _, words) = bpeRun(df, textCol, nMerges)
+    requireMerges(nMerges)
+    val (table, _, words) = bpeLoop(df, textCol, nMerges, batch = 1)
     // the merge table is driver-built — the word table has no
     // remaining consumer here
     words.unpersist(blocking = false)
     table
   }
+
+  private def requireMerges(nMerges: Int): Unit =
+    require(nMerges >= 1 && nMerges <= 4096, s"nMerges in [1,4096]: $nMerges")
 
   /** BPE APPLICATION: segment the corpus with the merges learned by
     * the same `nMerges` training rounds and return the corpus TOKEN
@@ -415,7 +422,8 @@ object LmOps {
     * frequency; corpus rows never re-enter. The final state's persist
     * is registered with [[CacheRegistry]] (in-job composition hook). */
   def bpeSegment(df: DataFrame, textCol: String, nMerges: Int): DataFrame = {
-    val (_, state, words) = bpeRun(df, textCol, nMerges)
+    requireMerges(nMerges)
+    val (_, state, words) = bpeLoop(df, textCol, nMerges, batch = 1)
     CacheRegistry.register(words)
     state.select(explode(col("syms")).as("token"), col("freq"))
       .groupBy(col("token")).agg(sum(col("freq")).as("n"))
@@ -436,7 +444,8 @@ object LmOps {
     * training's bounded loop. */
   def bpeFertility(df: DataFrame, sourceCol: String, textCol: String,
       nMerges: Int): DataFrame = {
-    val (_, state, words) = bpeRun(df, textCol, nMerges)
+    requireMerges(nMerges)
+    val (_, state, words) = bpeLoop(df, textCol, nMerges, batch = 1)
     CacheRegistry.register(words)
     val sw = df.select(col(sourceCol).as("source"),
         explode(split(col(textCol), " ")).as("word"))
@@ -465,11 +474,79 @@ object LmOps {
       .select(col("l"), element_at(col("ss"), col("p") + 2).as("r"),
         col("f").as("c"))
 
-  /** Shared BPE training loop: (merge table, final segmented word
-    * state (word, freq, syms) — persisted; the caller owns release). */
-  private def bpeRun(df: DataFrame, textCol: String,
-      nMerges: Int): (DataFrame, DataFrame, DataFrame) = {
-    require(nMerges >= 1 && nMerges <= 4096, s"nMerges in [1,4096]: $nMerges")
+  /** BATCHED BPE training (round-12, VERDICT r11 item 5): production
+    * vocabularies need ~32k merges, and [[bpeTrain]]'s one-job-per-
+    * merge loop hits the scheduler floor (~120 ms/job ⇒ hours of pure
+    * scheduling at 32k rounds) long before any data-size limit. Each
+    * round here collects the TOP ranked pairs once (one job), admits
+    * the maximal mutually-non-conflicting PREFIX of the ranking —
+    * stopping at the first pair that shares a symbol (or merged
+    * output) with an earlier admission, because skipping past a
+    * conflict could reorder against the sequential argmax — and
+    * applies the whole batch in one native fold. Rounds shrink by ~the
+    * batch factor; driver traffic stays O(batch) rows per round.
+    *
+    * EXACTNESS — the strict-dominance trim (round 13; replaces the
+    * round-12 post-batch rewind guard, whose "output-containing pair
+    * counts are post-batch-invariant" premise had a tie-case hole: a
+    * later admission (l_i,r_i) can consume occurrences ADJACENT to an
+    * earlier output — "out_j l_i r_i" turns (out_j,l_i) into
+    * (out_j,out_i), splitting its count across two pairs, so a
+    * sequential mid-batch tie could hide below both fragments). The
+    * round-13 rule needs NO extra job. Let c_conflict be the count of
+    * the first NON-admitted ranking row (the stop row; −1 if the
+    * exhaustive collect was fully admitted). Keep only the admissions
+    * i ≥ 1 with c_i > c_conflict (admission 0 — the true round-start
+    * argmax — is always kept). Proof this is sequential-exact, by
+    * induction on steps: at step i sequential ranks (count desc, l, r)
+    * over (a) admission i, whose count is still c_i (admitted pairs
+    * are symbol-disjoint from each other and from outputs, so earlier
+    * admissions never touch its occurrences); (b) non-output pairs,
+    * whose counts only DECREASE under merges (a merge destroys
+    * adjacent pairs and creates only output-containing ones) and which
+    * rank below admission i at round start — later admissions and
+    * trimmed rows lose even count-ties to it by the ranking's own lex
+    * order, non-collected pairs have count ≤ c_conflict < c_i; and
+    * (c) output-containing pairs P, each of whose occurrences at step
+    * i spans a junction "… l_j r_j X …" that at ROUND START was an
+    * occurrence of the unique BRIDGE pair (r_j, s) / (s, l_j) /
+    * (r_j, l_m) — a pair sharing a symbol with admission j, hence
+    * non-admitted (a conflicting row inside the prefix would have
+    * stopped admission), hence count_start(bridge) ≤ c_conflict. So
+    * c_P(step i) ≤ c_conflict < c_i and P cannot win even a lex
+    * tiebreak, because ties cannot occur. Sequential's argmax at step
+    * i is exactly admission i. ∎ (A probe had measured the unguarded
+    * divergence at merge 23 of 64: sequential's (c,o)→co enabled
+    * (co,lu) mid-batch; c_(co,lu) ≤ c_conflict, so the trim cuts that
+    * round at the boundary and re-ranks next round.) Count ties are
+    * common in BPE tails, so the trim costs batch width there — but it
+    * removes round 12's second job per round entirely, and the Zipf
+    * head (where batching pays) is mostly strict. An sf0.1 probe
+    * measured merge-for-merge equality with [[bpeTrain]] at 64/16 and
+    * 512/64, Round12OpsSpec pins it at 24/16 and batch=1, and the p86
+    * gate proves it against the SEQUENTIAL oracle every round.
+    *
+    * At `batch` = 1 this is [[bpeTrain]]: both run one loop. Like
+    * [[bpeTrain]], rounds 2 onward are planned AQE-off and the
+    * caller's session confs are never changed. */
+  def bpeTrainBatched(df: DataFrame, textCol: String, nMerges: Int,
+      batch: Int = 4): DataFrame = {
+    require(nMerges >= 1 && nMerges <= 65536,
+      s"nMerges in [1,65536]: $nMerges")
+    require(batch >= 1 && batch <= 256, s"batch in [1,256]: $batch")
+    val (table, _, words) = bpeLoop(df, textCol, nMerges, batch)
+    words.unpersist(blocking = false)
+    table
+  }
+
+  /** The BPE training loop behind every public BPE operator:
+    * (merge table, final segmented word state (word, freq, syms), the
+    * persisted word table — the caller owns its release). Each round
+    * collects the top ranked pairs in one job and admits the
+    * [[bpeTrainBatched]] prefix; at `batch` = 1 that is exactly the
+    * round's argmax, the sequential loop of [[bpeTrain]]. */
+  private def bpeLoop(df: DataFrame, textCol: String, nMerges: Int,
+      batch: Int): (DataFrame, DataFrame, DataFrame) = {
     val spark = df.sparkSession
     val words = df
       .select(explode(split(col(textCol), " ")).as("word"))
@@ -481,13 +558,6 @@ object LmOps {
         // empty leading substring for a zero-width match at start
         split(col("word"), "(?=.)").as("syms"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // greedy left-to-right merge pass — ONE reference-object native
-    // expression per generation ([[graft.functions.BpeApply]]; the
-    // nested-`aggregate`-HOF spelling blew up analyzer/codegen far
-    // below the 4096 cap, the NearestEval failure mode)
-    def mergeFold(d: DataFrame, l: String, r: String): DataFrame =
-      d.withColumn("syms",
-        graft.functions.native.bpe_apply(col("syms"), Seq((l, r))))
     // `state` is the QUERY view of the current generation — a flat
     // LogicalRDD over a lineage-truncated, cached RDD
     // (Bridge.cutLineageCached): without the cut, generation k nests
@@ -548,250 +618,57 @@ object LmOps {
     val round1Counts = pairRowsOf(words, "syms", 1)
       .observe(rowsObs, count(lit(1)).as("n"))
       .groupBy(col("l"), col("r")).agg(sum(col("c")).as("c"))
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    // Round-13 loop-floor cut (same treatment as ClusterOps' fixpoint
-    // loop): under AQE each argmax round decomposes into one job per
-    // exchange (~2 jobs/merge of scheduling). Round 1 runs under the
-    // session confs — its action materializes `words`' cache, and AQE
-    // sizes that cache's partitions to the actual word-table bytes —
-    // then the remaining rounds run AQE-free with shuffle partitions
-    // DERIVED from that materialized layout (scale-adaptive: a 100 TB
-    // corpus's ~10⁷-row word table keeps its size-appropriate count).
-    // Counts are exact integer sums with a total tie order —
-    // partitioning cannot change the argmax.
-    //
-    // SINGLE-QUERY-AT-A-TIME assumption (round-14, ADVICE r13): these
-    // are SESSION-wide conf mutations — any concurrent query on the
-    // same SparkSession would silently plan AQE-off with the
-    // BPE-derived partition count until the `finally` restores them.
-    // The harness runs one query at a time; concurrent callers must
-    // run BPE training in a cloned session (SparkSession.cloneSession)
-    // so the overrides cannot leak.
-    val bpeSpark = df.sparkSession
-    val prevAqe = bpeSpark.conf.getOption("spark.sql.adaptive.enabled")
-    val prevParts = bpeSpark.conf.getOption("spark.sql.shuffle.partitions")
-    try {
-      var step = 1
-      var exhausted = false
-      while (step <= nMerges && !exhausted) {
-        // the argmax collect IS the action that materializes (and
-        // truncates) this generation's checkpoint — no separate
-        // count() job per round (round 11: the extra materialization
-        // jobs were half of p81/p82's suite cost). Round 1 ranks the
-        // observed full recount; incremental mode ranks the maintained
-        // table; recount mode re-ranks a fresh full recount of the
-        // state — identical longs in every mode (see the mode-switch
-        // note above).
-        val bestDs = (if (step == 1) round1Counts
-          else if (incremental) counts
-          else recount(state))
-          .orderBy(col("c").desc, col("l"), col("r"))
-          .limit(1)
-        val best = bestDs.collect()
-        if (step == 1) {
-          // `words` is materialized now — derive the loop layout and
-          // the count-maintenance mode (both from the materialized
-          // data, not from core count). The observation is completed
-          // SYNCHRONOUSLY from the executed plan (the collect's own
-          // listener ride is async — the checkpointTrackedSum lesson).
-          val parts = math.max(1, words.rdd.getNumPartitions)
-          bpeSpark.conf.set("spark.sql.adaptive.enabled", "false")
-          bpeSpark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-          org.apache.spark.sql.graftbridge.Bridge
-            .fireObservations(bestDs, "bpeRecountRows", 0L)
-          incremental =
-            observedRows(rowsObs) >= incrementalThreshold(bpeSpark)
-        }
-        // `state`'s parent and `counts`' predecessor are now cached
-        // and past their last read: free them
-        if (prevRdd != null) { prevRdd.unpersist(blocking = false); prevRdd = null }
-        if (prevCountsRdd != null) {
-          prevCountsRdd.unpersist(blocking = false); prevCountsRdd = null
-        }
-        if (best.isEmpty) exhausted = true
-        else {
-          val (l, r, c) = (best.head.getString(0), best.head.getString(1),
-            best.head.getLong(2))
-          merges += ((step, l, r, c))
-          if (incremental) {
-            // ONE scan serves both consumers (BpeStep): the cached
-            // generation carries the merged syms AND the per-word
-            // signed pair delta; the next state and the count update
-            // are projections of it. The maintained table is seeded
-            // with one recount of generation 1; thereafter each round
-            // folds the exact delta. Pairs whose count reaches zero
-            // leave the table (c > 0), so exhaustion is still "no
-            // adjacent pair anywhere".
-            val (gen, genRdd) = org.apache.spark.sql.graftbridge.Bridge
-              .cutLineageCached(state.select(col("word"), col("freq"),
-                graft.functions.native.bpe_step(col("syms"), col("freq"),
-                  Seq((l, r))).as("st")))
-            val next = gen.select(col("word"), col("freq"),
-              col("st.syms").as("syms"))
-            val (nextCounts, nextCountsRdd) =
-              if (counts == null)
-                org.apache.spark.sql.graftbridge.Bridge
-                  .cutLineageCached(recount(next))
-              else
-                org.apache.spark.sql.graftbridge.Bridge.cutLineageCached(
-                  counts.unionAll(gen.select(explode(col("st.pd")).as("d"))
-                    .select(col("d.l"), col("d.r"), col("d.c")))
-                    .groupBy(col("l"), col("r")).agg(sum(col("c")).as("c"))
-                    .filter(col("c") > 0))
-            prevCountsRdd = countsRdd
-            countsRdd = nextCountsRdd
-            counts = nextCounts
-            prevRdd = stateRdd
-            stateRdd = genRdd
-            state = next
-          } else {
-            val (next, nextRdd) = org.apache.spark.sql.graftbridge.Bridge
-              .cutLineageCached(mergeFold(state, l, r))
-            prevRdd = stateRdd
-            stateRdd = nextRdd
-            state = next
-          }
-          step += 1
-        }
-      }
-    } finally {
-      prevAqe.fold(bpeSpark.conf.unset("spark.sql.adaptive.enabled"))(v =>
-        bpeSpark.conf.set("spark.sql.adaptive.enabled", v))
-      prevParts.fold(bpeSpark.conf.unset("spark.sql.shuffle.partitions"))(v =>
-        bpeSpark.conf.set("spark.sql.shuffle.partitions", v))
-    }
-    // the loop's generations are no longer needed: the final
-    // segmentation rebuilds as ONE native BpeApply projection over the
-    // persisted `words` (all merges are known — a single expression
-    // regardless of merge count, no persistence chain for the caller
-    // to manage beyond `words`)
-    if (stateRdd != null) stateRdd.unpersist(blocking = false)
-    if (prevRdd != null) prevRdd.unpersist(blocking = false)
-    if (countsRdd != null) countsRdd.unpersist(blocking = false)
-    if (prevCountsRdd != null) prevCountsRdd.unpersist(blocking = false)
-    val finalState = words.withColumn("syms",
-      graft.functions.native.bpe_apply(col("syms"),
-        merges.toSeq.map { case (_, l, r, _) => (l, r) }))
-    import spark.implicits._
-    (merges.toSeq.toDF("step", "lsym", "rsym", "c"), finalState, words)
-  }
-
-  /** BATCHED BPE training (round-12, VERDICT r11 item 5): production
-    * vocabularies need ~32k merges, and [[bpeTrain]]'s one-job-per-
-    * merge loop hits the scheduler floor (~120 ms/job ⇒ hours of pure
-    * scheduling at 32k rounds) long before any data-size limit. Each
-    * round here collects the TOP ranked pairs once (one job), admits
-    * the maximal mutually-non-conflicting PREFIX of the ranking —
-    * stopping at the first pair that shares a symbol (or merged
-    * output) with an earlier admission, because skipping past a
-    * conflict could reorder against the sequential argmax — and
-    * applies the whole batch in one native fold. Rounds shrink by ~the
-    * batch factor; driver traffic stays O(batch) rows per round.
-    *
-    * EXACTNESS — the strict-dominance trim (round 13; replaces the
-    * round-12 post-batch rewind guard, whose "output-containing pair
-    * counts are post-batch-invariant" premise had a tie-case hole: a
-    * later admission (l_i,r_i) can consume occurrences ADJACENT to an
-    * earlier output — "out_j l_i r_i" turns (out_j,l_i) into
-    * (out_j,out_i), splitting its count across two pairs, so a
-    * sequential mid-batch tie could hide below both fragments). The
-    * round-13 rule needs NO extra job. Let c_conflict be the count of
-    * the first NON-admitted ranking row (the stop row; −1 if the
-    * exhaustive collect was fully admitted). Keep only the admissions
-    * i ≥ 1 with c_i > c_conflict (admission 0 — the true round-start
-    * argmax — is always kept). Proof this is sequential-exact, by
-    * induction on steps: at step i sequential ranks (count desc, l, r)
-    * over (a) admission i, whose count is still c_i (admitted pairs
-    * are symbol-disjoint from each other and from outputs, so earlier
-    * admissions never touch its occurrences); (b) non-output pairs,
-    * whose counts only DECREASE under merges (a merge destroys
-    * adjacent pairs and creates only output-containing ones) and which
-    * rank below admission i at round start — later admissions and
-    * trimmed rows lose even count-ties to it by the ranking's own lex
-    * order, non-collected pairs have count ≤ c_conflict < c_i; and
-    * (c) output-containing pairs P, each of whose occurrences at step
-    * i spans a junction "… l_j r_j X …" that at ROUND START was an
-    * occurrence of the unique BRIDGE pair (r_j, s) / (s, l_j) /
-    * (r_j, l_m) — a pair sharing a symbol with admission j, hence
-    * non-admitted (a conflicting row inside the prefix would have
-    * stopped admission), hence count_start(bridge) ≤ c_conflict. So
-    * c_P(step i) ≤ c_conflict < c_i and P cannot win even a lex
-    * tiebreak, because ties cannot occur. Sequential's argmax at step
-    * i is exactly admission i. ∎ (A probe had measured the unguarded
-    * divergence at merge 23 of 64: sequential's (c,o)→co enabled
-    * (co,lu) mid-batch; c_(co,lu) ≤ c_conflict, so the trim cuts that
-    * round at the boundary and re-ranks next round.) Count ties are
-    * common in BPE tails, so the trim costs batch width there — but it
-    * removes round 12's second job per round entirely, and the Zipf
-    * head (where batching pays) is mostly strict. An sf0.1 probe
-    * measured merge-for-merge equality with [[bpeTrain]] at 64/16 and
-    * 512/64, Round12OpsSpec pins it at 24/16 and batch=1, and the p86
-    * gate proves it against the SEQUENTIAL oracle every round. */
-  def bpeTrainBatched(df: DataFrame, textCol: String, nMerges: Int,
-      batch: Int = 4): DataFrame = {
-    require(nMerges >= 1 && nMerges <= 65536,
-      s"nMerges in [1,65536]: $nMerges")
-    require(batch >= 1 && batch <= 256, s"batch in [1,256]: $batch")
-    val spark = df.sparkSession
-    val words = df
-      .select(explode(split(col(textCol), " ")).as("word"))
-      .filter(col("word").rlike("^[a-z0-9]+$"))
-      .groupBy(col("word")).agg(count(lit(1)).as("freq"))
-      .select(col("word"), col("freq"),
-        split(col("word"), "(?=.)").as("syms"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // same lineage-cut view / cached-RDD-handle split as [[bpeRun]]
-    var state = words
-    var stateRdd: org.apache.spark.rdd.RDD[_] = null
-    var prevRdd: org.apache.spark.rdd.RDD[_] = null
     val merges =
       scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    // Round-14: the same threshold-gated INCREMENTAL pair-count table
-    // as [[bpeRun]] (see the mode-switch note there) — above the
-    // recount-rows threshold each round folds the exact delta of the
-    // batch's changed words into the previous table instead of
-    // re-exploding the whole word table; identical longs by induction,
-    // so the over-collect ranking, the conflict prefix, and the
-    // strict-dominance trim see exactly the counts a recount would
-    // produce (Round12OpsSpec pins seq==batched merge-for-merge).
-    var counts: DataFrame = null
-    var countsRdd: org.apache.spark.rdd.RDD[_] = null
-    var prevCountsRdd: org.apache.spark.rdd.RDD[_] = null
-    var incremental = false
-    val rowsObs = org.apache.spark.sql.Observation()
-    val round1Counts = pairRowsOf(words, "syms", 1)
-      .observe(rowsObs, count(lit(1)).as("n"))
-      .groupBy(col("l"), col("r")).agg(sum(col("c")).as("c"))
-    def fold(merges: Seq[(String, String)]) =
-      org.apache.spark.sql.graftbridge.Bridge.cutLineageCached(
-        state.withColumn("syms",
-          graft.functions.native.bpe_apply(col("syms"), merges)))
-    // same AQE-free derived-layout loop as [[bpeRun]] (round 13): round
-    // 1 materializes `words` under the session confs (AQE sizes the
-    // cache), later rounds run one job each
-    val prevAqe = spark.conf.getOption("spark.sql.adaptive.enabled")
-    val prevParts = spark.conf.getOption("spark.sql.shuffle.partitions")
-    try {
+    // Round-13 loop-floor cut (same treatment as ClusterOps' fixpoint
+    // loop): under AQE each ranking round decomposes into one job per
+    // exchange (~2 jobs/merge of scheduling). Round 1 runs in the
+    // caller's session — its action materializes `words`' cache, and
+    // AQE sizes that cache's partitions to the actual word-table bytes
+    // — then the remaining rounds run AQE-free with shuffle partitions
+    // DERIVED from that materialized layout (scale-adaptive: a 100 TB
+    // corpus's ~10⁷-row word table keeps its size-appropriate count).
+    // Those rounds are planned by Bridge.nonAdaptive and
+    // collectNonAdaptive: the caller's confs never change, so a
+    // concurrent query keeps planning with its own. Counts are exact
+    // integer sums with a total tie order — partitioning cannot change
+    // the ranking.
     var exhausted = false
     var firstRound = true
+    var parts = 1
     while (merges.size < nMerges && !exhausted) {
       val want = math.min(batch, nMerges - merges.size)
-      // over-collect: conflicts consume ranking slots before the stop
+      // the ranking collect IS the action that materializes (and
+      // truncates) this generation's checkpoint — no separate count()
+      // job per round (round 11: the extra materialization jobs were
+      // half of p81/p82's suite cost). Round 1 ranks the observed full
+      // recount; incremental mode ranks the maintained table; recount
+      // mode re-ranks a fresh full recount of the state — identical
+      // longs in every mode (see the mode-switch note above).
+      // Over-collect: conflicts consume ranking slots before the stop.
       val topDs = (if (firstRound) round1Counts
         else if (incremental) counts
         else recount(state))
         .orderBy(col("c").desc, col("l"), col("r"))
         .limit(want * 4 + 8)
-      val top = topDs.collect()
+      val top =
+        if (firstRound) topDs.collect()
+        else org.apache.spark.sql.graftbridge.Bridge
+          .collectNonAdaptive(topDs, parts)
       if (firstRound) {
+        // `words` is materialized now — derive the loop layout and the
+        // count-maintenance mode (both from the materialized data, not
+        // from core count). The observation is completed SYNCHRONOUSLY
+        // from the executed plan (the collect's own listener ride is
+        // async — the checkpointTrackedSum lesson).
         firstRound = false
-        val parts = math.max(1, words.rdd.getNumPartitions)
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+        parts = math.max(1, words.rdd.getNumPartitions)
         org.apache.spark.sql.graftbridge.Bridge
           .fireObservations(topDs, "bpeRecountRows", 0L)
         incremental = observedRows(rowsObs) >= incrementalThreshold(spark)
       }
+      // `state`'s parent and `counts`' predecessor are now cached and
+      // past their last read: free them
       if (prevRdd != null) { prevRdd.unpersist(blocking = false); prevRdd = null }
       if (prevCountsRdd != null) {
         prevCountsRdd.unpersist(blocking = false); prevCountsRdd = null
@@ -812,7 +689,7 @@ object LmOps {
               used += l; used += r; used += (l + r)
             }
           }
-        // STRICT-DOMINANCE TRIM (see scaladoc): every mid-batch
+        // STRICT-DOMINANCE TRIM (see bpeTrainBatched): every mid-batch
         // challenger — a pair containing a batch output, or any
         // non-collected pair — has count ≤ the first non-admitted
         // ranking row's count, and only output-containing challengers
@@ -830,9 +707,14 @@ object LmOps {
         val applied = admitted.take(math.max(keep, 1)).toSeq
         val appliedPairs = applied.map { case (l, r, _) => (l, r) }
         if (incremental) {
-          // ONE scan serves both consumers (BpeStep; see bpeRun):
-          // seed with one recount of generation 1, then fold the
-          // exact delta of the words each batch actually changed
+          // ONE scan serves both consumers (BpeStep): the cached
+          // generation carries the merged syms AND the per-word signed
+          // pair delta; the next state and the count update are
+          // projections of it. The maintained table is seeded with one
+          // recount of generation 1; thereafter each round folds the
+          // exact delta of the words the batch actually changed. Pairs
+          // whose count reaches zero leave the table (c > 0), so
+          // exhaustion is still "no adjacent pair anywhere".
           val (gen, genRdd) = org.apache.spark.sql.graftbridge.Bridge
             .cutLineageCached(state.select(col("word"), col("freq"),
               graft.functions.native.bpe_step(col("syms"), col("freq"),
@@ -841,14 +723,16 @@ object LmOps {
             col("st.syms").as("syms"))
           val (nextCounts, nextCountsRdd) =
             if (counts == null)
-              org.apache.spark.sql.graftbridge.Bridge
-                .cutLineageCached(recount(next))
+              org.apache.spark.sql.graftbridge.Bridge.cutLineageCached(
+                org.apache.spark.sql.graftbridge.Bridge
+                  .nonAdaptive(recount(next), parts))
             else
               org.apache.spark.sql.graftbridge.Bridge.cutLineageCached(
-                counts.unionAll(gen.select(explode(col("st.pd")).as("d"))
-                  .select(col("d.l"), col("d.r"), col("d.c")))
-                  .groupBy(col("l"), col("r")).agg(sum(col("c")).as("c"))
-                  .filter(col("c") > 0))
+                org.apache.spark.sql.graftbridge.Bridge.nonAdaptive(
+                  counts.unionAll(gen.select(explode(col("st.pd")).as("d"))
+                    .select(col("d.l"), col("d.r"), col("d.c")))
+                    .groupBy(col("l"), col("r")).agg(sum(col("c")).as("c"))
+                    .filter(col("c") > 0), parts))
           prevCountsRdd = countsRdd
           countsRdd = nextCountsRdd
           counts = nextCounts
@@ -856,7 +740,13 @@ object LmOps {
           stateRdd = genRdd
           state = next
         } else {
-          val (next, nextRdd) = fold(appliedPairs)
+          // greedy left-to-right merge pass — ONE reference-object
+          // native expression per generation ([[graft.functions.BpeApply]];
+          // the nested-`aggregate`-HOF spelling blew up analyzer/codegen
+          // far below the 4096 cap, the NearestEval failure mode)
+          val (next, nextRdd) = org.apache.spark.sql.graftbridge.Bridge
+            .cutLineageCached(state.withColumn("syms",
+              graft.functions.native.bpe_apply(col("syms"), appliedPairs)))
           prevRdd = stateRdd
           stateRdd = nextRdd
           state = next
@@ -866,18 +756,19 @@ object LmOps {
         }
       }
     }
-    } finally {
-      prevAqe.fold(spark.conf.unset("spark.sql.adaptive.enabled"))(v =>
-        spark.conf.set("spark.sql.adaptive.enabled", v))
-      prevParts.fold(spark.conf.unset("spark.sql.shuffle.partitions"))(v =>
-        spark.conf.set("spark.sql.shuffle.partitions", v))
-    }
     if (stateRdd != null) stateRdd.unpersist(blocking = false)
     if (prevRdd != null) prevRdd.unpersist(blocking = false)
     if (countsRdd != null) countsRdd.unpersist(blocking = false)
     if (prevCountsRdd != null) prevCountsRdd.unpersist(blocking = false)
-    words.unpersist(blocking = false)
+    // the loop's generations are no longer needed: the final
+    // segmentation rebuilds as ONE native BpeApply projection over the
+    // persisted `words`, in the caller's session (all merges are known
+    // — a single expression regardless of merge count, no persistence
+    // chain for the caller to manage beyond `words`)
+    val finalState = words.withColumn("syms",
+      graft.functions.native.bpe_apply(col("syms"),
+        merges.toSeq.map { case (_, l, r, _) => (l, r) }))
     import spark.implicits._
-    merges.toSeq.toDF("step", "lsym", "rsym", "c")
+    (merges.toSeq.toDF("step", "lsym", "rsym", "c"), finalState, words)
   }
 }

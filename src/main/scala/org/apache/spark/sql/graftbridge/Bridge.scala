@@ -21,6 +21,65 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** `df` planned without AQE and with `shufflePartitions` shuffle
+    * partitions, as a frame of the same session over the plan's RDD.
+    * An iterative operator runs its internal rounds through it (or
+    * through [[collectNonAdaptive]]), so the rounds plan non-adaptive
+    * while the caller's session confs, and a concurrent query planning
+    * with them, never change.
+    *
+    * The frame is a flat `LogicalRDD` leaf with no exchange above it,
+    * so the action that reads it is not adaptive either: it runs the
+    * round's stages as one job, as a session with AQE off does. Its RDD
+    * is lazy, except that a broadcast join's build side is collected
+    * here (Spark's non-adaptive broadcast does that on `execute()`).
+    * Observations attached above the returned frame fire in the
+    * caller's session; attach them there, not to `df`. */
+  def nonAdaptive(df: org.apache.spark.sql.DataFrame, shufflePartitions: Int)
+      : org.apache.spark.sql.DataFrame = {
+    val (session, plan) = nonAdaptivePlan(df, shufflePartitions)
+    val rdd = inSession(session)(plan.execute())
+    session.internalCreateDataFrame(rdd, df.schema, isStreaming = false)
+  }
+
+  /** `df.collect()` planned as [[nonAdaptive]] plans it, in one job. */
+  def collectNonAdaptive(df: org.apache.spark.sql.DataFrame,
+      shufflePartitions: Int): Array[org.apache.spark.sql.Row] = {
+    val (session, plan) = nonAdaptivePlan(df, shufflePartitions)
+    val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToScalaConverter(df.schema)
+    inSession(session)(plan.executeCollect())
+      .map(toRow(_).asInstanceOf[org.apache.spark.sql.Row])
+  }
+
+  // The confs are set on a copy of the session's SQLConf that is active
+  // on this thread only while `df` is optimized, planned and prepared.
+  // The plan is prepared without `InsertAdaptiveSparkPlan`, which reads
+  // the session's own conf, not the thread's.
+  private def nonAdaptivePlan(df: org.apache.spark.sql.DataFrame,
+      shufflePartitions: Int): (org.apache.spark.sql.classic.SparkSession,
+        org.apache.spark.sql.execution.SparkPlan) = {
+    import org.apache.spark.sql.internal.SQLConf
+    val session = df.sparkSession
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val conf = session.sessionState.conf.clone()
+    conf.setConf(SQLConf.ADAPTIVE_EXECUTION_ENABLED, false)
+    conf.setConf(SQLConf.SHUFFLE_PARTITIONS, shufflePartitions)
+    SQLConf.withExistingConf(conf) {
+      val qe = session.sessionState.executePlan(df.queryExecution.analyzed)
+      (session, org.apache.spark.sql.execution.QueryExecution
+        .prepareExecutedPlan(session, qe.sparkPlan))
+    }
+  }
+
+  // Jobs started outside a Dataset action: tasks get the session's SQL
+  // confs and run in its executor classloader, as an action's do.
+  private def inSession[T](session: org.apache.spark.sql.classic.SparkSession)(
+      f: => T): T =
+    session.artifactManager.withResources(
+      org.apache.spark.sql.execution.SQLExecution
+        .withSQLConfPropagated(session)(f))
+
   /** Analyzed logical plan of a DataFrame. */
   def analyzed(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =

@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (name drift between queries and oracleSql, a module dropped from
   * SparkEntry's ++ chain) fails `sbt test` before any artifact is cut.
   */
-class GateInventorySpec extends AnyFunSuite {
+class GateInventorySpec extends AnyFunSuite with ResetsSessionConfs {
 
   // Bump this floor when ADDING gates; it must never go down. 191 =
   // the round-10 inventory (60 q + 33 r + 80 p + 18 m); the 11 DuckDB

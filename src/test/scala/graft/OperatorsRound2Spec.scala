@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{DedupOps, RangeJoin}
 
-class OperatorsRound2Spec extends AnyFunSuite {
+class OperatorsRound2Spec extends AnyFunSuite with ResetsSessionConfs {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{DedupOps, VectorOps}
 
-class PipelineSpec extends AnyFunSuite {
+class PipelineSpec extends AnyFunSuite with ResetsSessionConfs {
   private val sf = "/root/testdata/sf0.001"
   private lazy val spark = SparkTestSession.spark
 

@@ -7,7 +7,7 @@ import graft.SparkTestSession
 
 /** Round-10 operator specs: oracle-exact distributed k-means
   * (kmeansFit) and the SemDeDup composition built on it (semDedup). */
-class Round10OpsSpec extends AnyFunSuite {
+class Round10OpsSpec extends AnyFunSuite with graft.ResetsSessionConfs {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 

@@ -9,7 +9,7 @@ import graft.SparkTestSession
 /** Round-11 operator additions: the PPJoin POSITIONAL filter (Xiao et
   * al. WWW'08) inside [[DedupOps.setSimJoinExact]].
   */
-class Round11OpsSpec extends AnyFunSuite {
+class Round11OpsSpec extends AnyFunSuite with graft.ResetsSessionConfs {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 
 /** Round-12 operator additions and fixes. */
-class Round12OpsSpec extends AnyFunSuite {
+class Round12OpsSpec extends AnyFunSuite with graft.ResetsSessionConfs {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 

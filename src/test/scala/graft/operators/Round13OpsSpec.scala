@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 
 /** Round-13 operator additions and fixes. */
-class Round13OpsSpec extends AnyFunSuite {
+class Round13OpsSpec extends AnyFunSuite with graft.ResetsSessionConfs {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 

@@ -5,6 +5,19 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
 
+object Round14OpsSpec {
+  /** Near-threshold random graph (the p28 shape: long diameter) plus
+    * an isolated clique and a path: edges (a, b). */
+  def ccGraph(spark: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    ((0 until 200).map(i => (i.toLong, i + 1L)) ++
+      (1 to 300).map(_ => (rnd.nextInt(400).toLong, 400L + rnd.nextInt(400))) ++
+      Seq((900L, 901L), (901L, 902L), (900L, 902L))).toDF("a", "b")
+  }
+}
+
 /** Round-14 optimization-round pins. */
 class Round14OpsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -289,20 +302,16 @@ class Round14OpsSpec extends AnyFunSuite {
   test("CC loop's broadcast-guarded AQE-off mode yields identical " +
       "labels to the AQE path, and restores the session confs") {
     import spark.implicits._
-    // near-threshold random graph (the p28 shape: long diameter) plus
-    // an isolated clique and a path
-    val rnd = new scala.util.Random(7)
-    val edges = ((0 until 200).map(i => (i.toLong, i + 1L)) ++
-      (1 to 300).map(_ => (rnd.nextInt(400).toLong, 400L + rnd.nextInt(400))) ++
-      Seq((900L, 901L), (901L, 902L), (900L, 902L))).toDF("a", "b")
+    val edges = Round14OpsSpec.ccGraph(spark)
     val aqeBefore = spark.conf.getOption("spark.sql.adaptive.enabled")
     val partsBefore = spark.conf.getOption("spark.sql.shuffle.partitions")
     def run() = ClusterOps.connectedComponents(edges, "a", "b", maxIter = 60)
       .as[(Long, Long)].collect().toMap
-    val guarded = run() // default: node count under the 1M guard
-    spark.conf.set(ClusterOps.BroadcastNodesConf, "0") // force AQE path
+    val guarded = run() // default: labels under the 10 MB threshold
+    // force the AQE path: no broadcast at all
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val viaAqe = try run()
-      finally spark.conf.unset(ClusterOps.BroadcastNodesConf)
+      finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     assert(guarded === viaAqe)
     assert(spark.conf.getOption("spark.sql.adaptive.enabled") === aqeBefore)
     assert(spark.conf.getOption("spark.sql.shuffle.partitions") === partsBefore)

@@ -8,7 +8,7 @@ import graft.SparkTestSession
 /** Round-7 additions: hashed linear classifier inference (p59),
   * cross-source n-gram overlap matrix (p60), cross-document chunk
   * dedup (p61). */
-class Round7bOpsSpec extends AnyFunSuite {
+class Round7bOpsSpec extends AnyFunSuite with graft.ResetsSessionConfs {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 

@@ -9,7 +9,7 @@ import graft.SparkTestSession
   * quadratic fix — identical hashes collapse to one banded row, pairs
   * re-expand output-proportionally), the relative candidate budget in
   * LshJoin, and the bit-mask source-overlap rewrite (p60). */
-class Round9OpsSpec extends AnyFunSuite {
+class Round9OpsSpec extends AnyFunSuite with graft.ResetsSessionConfs {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
