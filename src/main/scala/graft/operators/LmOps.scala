@@ -401,10 +401,10 @@ object LmOps {
     * a concurrent query in the same session keeps its own. */
   def bpeTrain(df: DataFrame, textCol: String, nMerges: Int): DataFrame = {
     requireMerges(nMerges)
-    val (table, _, words) = bpeLoop(df, textCol, nMerges, batch = 1)
+    val (table, _, persisted) = bpeLoop(df, textCol, nMerges, batch = 1)
     // the merge table is driver-built — the word table has no
     // remaining consumer here
-    words.unpersist(blocking = false)
+    persisted.foreach(_.unpersist(blocking = false))
     table
   }
 
@@ -423,8 +423,8 @@ object LmOps {
     * is registered with [[CacheRegistry]] (in-job composition hook). */
   def bpeSegment(df: DataFrame, textCol: String, nMerges: Int): DataFrame = {
     requireMerges(nMerges)
-    val (_, state, words) = bpeLoop(df, textCol, nMerges, batch = 1)
-    CacheRegistry.register(words)
+    val (_, state, persisted) = bpeLoop(df, textCol, nMerges, batch = 1)
+    persisted.foreach(CacheRegistry.register)
     state.select(explode(col("syms")).as("token"), col("freq"))
       .groupBy(col("token")).agg(sum(col("freq")).as("n"))
   }
@@ -445,8 +445,8 @@ object LmOps {
   def bpeFertility(df: DataFrame, sourceCol: String, textCol: String,
       nMerges: Int): DataFrame = {
     requireMerges(nMerges)
-    val (_, state, words) = bpeLoop(df, textCol, nMerges, batch = 1)
-    CacheRegistry.register(words)
+    val (_, state, persisted) = bpeLoop(df, textCol, nMerges, batch = 1)
+    persisted.foreach(CacheRegistry.register)
     val sw = df.select(col(sourceCol).as("source"),
         explode(split(col(textCol), " ")).as("word"))
       .filter(col("word").rlike("^[a-z0-9]+$"))
@@ -534,19 +534,23 @@ object LmOps {
     require(nMerges >= 1 && nMerges <= 65536,
       s"nMerges in [1,65536]: $nMerges")
     require(batch >= 1 && batch <= 256, s"batch in [1,256]: $batch")
-    val (table, _, words) = bpeLoop(df, textCol, nMerges, batch)
-    words.unpersist(blocking = false)
+    val (table, _, persisted) = bpeLoop(df, textCol, nMerges, batch)
+    persisted.foreach(_.unpersist(blocking = false))
     table
   }
 
   /** The BPE training loop behind every public BPE operator:
     * (merge table, final segmented word state (word, freq, syms), the
-    * persisted word table — the caller owns its release). Each round
+    * word table if this call persisted it — the caller owns its
+    * release). The cache manager matches cached data by plan, so a
+    * word table an earlier [[bpeSegment]] or [[bpeFertility]] on the
+    * same corpus left cached is reused here and stays theirs. Each round
     * collects the top ranked pairs in one job and admits the
     * [[bpeTrainBatched]] prefix; at `batch` = 1 that is exactly the
     * round's argmax, the sequential loop of [[bpeTrain]]. */
   private def bpeLoop(df: DataFrame, textCol: String, nMerges: Int,
-      batch: Int): (DataFrame, DataFrame, DataFrame) = {
+      batch: Int): (DataFrame, DataFrame, Option[DataFrame]) = {
+    import org.apache.spark.storage.StorageLevel
     val spark = df.sparkSession
     val words = df
       .select(explode(split(col(textCol), " ")).as("word"))
@@ -557,7 +561,9 @@ object LmOps {
         // end (no trailing empty symbol), and Java never emits the
         // empty leading substring for a zero-width match at start
         split(col("word"), "(?=.)").as("syms"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val persisted =
+      if (words.storageLevel != StorageLevel.NONE) None
+      else Some(words.persist(StorageLevel.MEMORY_AND_DISK))
     // `state` is the QUERY view of the current generation — a flat
     // LogicalRDD over a lineage-truncated, cached RDD
     // (Bridge.cutLineageCached): without the cut, generation k nests
@@ -769,6 +775,6 @@ object LmOps {
       graft.functions.native.bpe_apply(col("syms"),
         merges.toSeq.map { case (_, l, r, _) => (l, r) }))
     import spark.implicits._
-    (merges.toSeq.toDF("step", "lsym", "rsym", "c"), finalState, words)
+    (merges.toSeq.toDF("step", "lsym", "rsym", "c"), finalState, persisted)
   }
 }

@@ -272,37 +272,6 @@ object JsonStructDecode {
     case other => throw new IllegalArgumentException(
       s"JSON struct encode: unsupported field type $other")
   }
-
-  /** JSON document → external Row (Transform path: user code sees java
-    * values, not Catalyst ones). */
-  def parseExternal(s: String, st: StructType): org.apache.spark.sql.Row =
-    toExternalRow(mapper.readTree(s), st)
-
-  private def toExternalRow(node: JsonNode, st: StructType)
-      : org.apache.spark.sql.Row = {
-    if (!node.isObject) throw new IllegalArgumentException(
-      s"struct column payload is not a JSON object: ${node.getNodeType}")
-    val arr = new Array[Any](st.fields.length)
-    var i = 0
-    while (i < st.fields.length) {
-      val f = st.fields(i)
-      val n = node.get(f.name)
-      arr(i) = if (n == null || n.isNull) null else externalConvert(n, f.dataType)
-      i += 1
-    }
-    org.apache.spark.sql.Row.fromSeq(arr.toIndexedSeq)
-  }
-
-  private def externalConvert(n: JsonNode, dt: DataType): Any = dt match {
-    case StringType => n.asText()
-    case nested: StructType => toExternalRow(n, nested)
-    case ArrayType(et, _) =>
-      (0 until n.size()).map(i =>
-        if (n.get(i).isNull) null else externalConvert(n.get(i), et))
-    case d: DecimalType =>
-      BigDecimal(n.decimalValue()).setScale(d.scale, BigDecimal.RoundingMode.HALF_UP)
-    case _ => convert(n, dt)
-  }
 }
 
 object Jdbc {
@@ -535,23 +504,20 @@ object Jdbc {
     Array.tabulate(n)(java.lang.reflect.Array.get(raw, _))
   }
 
-  /** Getter honoring the REQUIRED Spark type: struct columns decode
-    * against the (possibly nested-pruned) required shape; everything
-    * else dispatches on the remote type as usual. */
-  def catalystGetter(f: RemoteField, requiredType: DataType): (ResultSet, Int) => Any =
-    (f.tpe, requiredType) match {
-      case (RemoteType.RStruct(_), st: StructType) => (rs, i) => {
-        val v = rs.getString(i)
-        if (v == null) null else JsonStructDecode.parse(v, st)
-      }
-      case _ => catalystGetter(f)
-    }
-
   /** Catalyst-value getter per field — the port of the reference's
     * per-type Arrow builders (`connection/postgres.rs:680-1268` etc.),
-    * producing InternalRow-compatible values. */
-  def catalystGetter(f: RemoteField): (ResultSet, Int) => Any = {
+    * producing InternalRow-compatible values. It is the connector's one
+    * decode table: plain scans, pushed aggregates and the Transform's
+    * raw rows all read through it. `requiredType` is the Spark type the
+    * reader wants; a struct column decodes against it (under Spark's
+    * nested-schema pruning, a subset of the declared struct), every
+    * other column dispatches on its remote type. */
+  def catalystGetter(f: RemoteField, requiredType: DataType): (ResultSet, Int) => Any = {
     import RemoteType._
+    val text: (ResultSet, Int) => Any = (rs, i) => {
+      val v = rs.getString(i)
+      if (v == null) null else UTF8String.fromString(v)
+    }
     f.tpe match {
       case RBool => (rs, i) => { val v = rs.getBoolean(i); if (rs.wasNull()) null else v }
       case RInt1 => (rs, i) => { val v = rs.getByte(i); if (rs.wasNull()) null else v }
@@ -577,10 +543,7 @@ object Jdbc {
         val v = rs.getBigDecimal(i)
         if (v == null) null else clampDecode(v, f, c.clampedScale)
       }
-      case RChar(_) | RVarchar(_) | RText | RJson | RXml => (rs, i) => {
-        val v = rs.getString(i)
-        if (v == null) null else UTF8String.fromString(v)
-      }
+      case RChar(_) | RVarchar(_) | RText | RJson | RXml => text
       case RBinary | RFixedBinary(_) | RVarBinary(_) | RUuid | RGeometry => (rs, i) => rs.getBytes(i)
       case RDate => (rs, i) => {
         val v = rs.getDate(i)
@@ -607,196 +570,14 @@ object Jdbc {
           else new org.apache.spark.sql.catalyst.util.GenericArrayData(
             sqlArrayElements(v).map(e => if (e == null) null else conv(e)))
         }
-      case other => (rs, i) => {
-        val v = rs.getString(i)
-        if (v == null) null else UTF8String.fromString(v)
-      }
-    }
-  }
-
-  /** Can every field decode straight into a writable column vector?
-    * (Everything scalar can; nested arrays fall back to the row reader.) */
-  def columnarSupported(fields: Seq[RemoteField]): Boolean = {
-    import RemoteType._
-    fields.forall(_.tpe match {
-      case RArray(_) | RStruct(_) => false
-      case _ => true
-    })
-  }
-
-  /** Vectorized decode: ResultSet column -> WritableColumnVector slot.
-    * The columnar analogue of [[catalystGetter]] — same value
-    * conventions (µs epochs, HALF_UP decimal rescale, TIME→µs-long,
-    * p>38→string), but primitives go straight into the vector with no
-    * boxing. The reference's decode layer is columnar end-to-end
-    * (row→Arrow builders, `connection/postgres.rs:680-1268`); this is
-    * that idea expressed against Spark's ColumnarBatch. */
-  def columnarSetter(f: RemoteField)
-      : (ResultSet, Int, org.apache.spark.sql.execution.vectorized.WritableColumnVector, Int) => Unit = {
-    import RemoteType._
-    import java.nio.charset.StandardCharsets.UTF_8
-    def putStr(vec: org.apache.spark.sql.execution.vectorized.WritableColumnVector,
-        row: Int, s: String): Unit = {
-      val b = s.getBytes(UTF_8)
-      vec.putByteArray(row, b, 0, b.length)
-    }
-    f.tpe match {
-      case RBool => (rs, i, vec, row) => {
-        val v = rs.getBoolean(i)
-        if (rs.wasNull()) vec.putNull(row) else vec.putBoolean(row, v)
-      }
-      case RInt1 => (rs, i, vec, row) => {
-        val v = rs.getByte(i)
-        if (rs.wasNull()) vec.putNull(row) else vec.putByte(row, v)
-      }
-      case RInt2 | RUInt1 => (rs, i, vec, row) => {
-        val v = rs.getShort(i)
-        if (rs.wasNull()) vec.putNull(row) else vec.putShort(row, v)
-      }
-      case RInt4 | RUInt2 => (rs, i, vec, row) => {
-        val v = rs.getInt(i)
-        if (rs.wasNull()) vec.putNull(row) else vec.putInt(row, v)
-      }
-      case RInt8 | RUInt4 => (rs, i, vec, row) => {
-        val v = rs.getLong(i)
-        if (rs.wasNull()) vec.putNull(row) else vec.putLong(row, v)
-      }
-      case RUInt8 => (rs, i, vec, row) => {
-        val v = rs.getBigDecimal(i)
-        if (v == null) vec.putNull(row)
-        else vec.putDecimal(row, Decimal(BigDecimal(v), 20, 0), 20)
-      }
-      case RFloat4 => (rs, i, vec, row) => {
-        val v = rs.getFloat(i)
-        if (rs.wasNull()) vec.putNull(row) else vec.putFloat(row, v)
-      }
-      case RFloat8 => (rs, i, vec, row) => {
-        val v = rs.getDouble(i)
-        if (rs.wasNull()) vec.putNull(row) else vec.putDouble(row, v)
-      }
-      case RDecimal(p, s) if p <= DecimalType.MAX_PRECISION => (rs, i, vec, row) => {
-        val v = rs.getBigDecimal(i)
-        if (v == null) vec.putNull(row)
-        else vec.putDecimal(row,
-          Decimal(BigDecimal(v.setScale(s, java.math.RoundingMode.HALF_UP)), p, s), p)
-      }
-      case RDecimal(_, _) => (rs, i, vec, row) => { // p > 38: stringified
-        val v = rs.getBigDecimal(i)
-        if (v == null) vec.putNull(row) else putStr(vec, row, v.toPlainString)
-      }
-      case c @ RDecimalClamp(_, _) => (rs, i, vec, row) => { // clamp38
-        val v = rs.getBigDecimal(i)
-        if (v == null) vec.putNull(row)
-        else vec.putDecimal(row, clampDecode(v, f, c.clampedScale),
-          DecimalType.MAX_PRECISION)
-      }
-      case RChar(_) | RVarchar(_) | RText | RJson | RXml => (rs, i, vec, row) => {
-        val v = rs.getString(i)
-        if (v == null) vec.putNull(row) else putStr(vec, row, v)
-      }
-      case RBinary | RFixedBinary(_) | RVarBinary(_) | RUuid | RGeometry => (rs, i, vec, row) => {
-        val v = rs.getBytes(i)
-        if (v == null) vec.putNull(row) else vec.putByteArray(row, v, 0, v.length)
-      }
-      case RDate => (rs, i, vec, row) => {
-        val v = rs.getDate(i)
-        if (v == null) vec.putNull(row)
-        else vec.putInt(row, DateTimeUtils.fromJavaDate(v))
-      }
-      case RTime => (rs, i, vec, row) => {
-        val v = rs.getTime(i)
-        if (v == null) vec.putNull(row)
-        else vec.putLong(row, v.toLocalTime.toNanoOfDay / 1000L)
-      }
-      case RTimestampNtz => (rs, i, vec, row) => {
-        val v = rs.getTimestamp(i)
-        if (v == null) vec.putNull(row)
-        else vec.putLong(row, DateTimeUtils.localDateTimeToMicros(v.toLocalDateTime))
-      }
-      case RTimestampTz => (rs, i, vec, row) => {
-        val v = rs.getTimestamp(i)
-        if (v == null) vec.putNull(row)
-        else vec.putLong(row, DateTimeUtils.fromJavaTimestamp(v))
-      }
-      case other => throw new IllegalStateException(
-        s"columnar decode for $other (guard with columnarSupported)")
-    }
-  }
-
-  /** External (Row-API) getter — used on the Transform path where user
-    * code sees java values, mirroring the reference transform operating
-    * on materialized batches (`transform.rs:86-167`). */
-  def externalGetter(f: RemoteField): (ResultSet, Int) => Any = {
-    import RemoteType._
-    f.tpe match {
-      case RBool => (rs, i) => { val v = rs.getBoolean(i); if (rs.wasNull()) null else v }
-      case RInt1 => (rs, i) => { val v = rs.getByte(i); if (rs.wasNull()) null else v }
-      case RInt2 | RUInt1 => (rs, i) => { val v = rs.getShort(i); if (rs.wasNull()) null else v }
-      case RInt4 | RUInt2 => (rs, i) => { val v = rs.getInt(i); if (rs.wasNull()) null else v }
-      case RInt8 | RUInt4 => (rs, i) => { val v = rs.getLong(i); if (rs.wasNull()) null else v }
-      case RUInt8 => (rs, i) => { val v = rs.getBigDecimal(i); if (v == null) null else BigDecimal(v) }
-      case RFloat4 => (rs, i) => { val v = rs.getFloat(i); if (rs.wasNull()) null else v }
-      case RFloat8 => (rs, i) => { val v = rs.getDouble(i); if (rs.wasNull()) null else v }
-      case RDecimal(p, s) if p <= DecimalType.MAX_PRECISION =>
-        (rs, i) => {
-          val v = rs.getBigDecimal(i)
-          if (v == null) null else BigDecimal(v.setScale(s, java.math.RoundingMode.HALF_UP))
-        }
-      case RDecimal(_, _) => (rs, i) => {
-        val v = rs.getBigDecimal(i); if (v == null) null else v.toPlainString
-      }
-      case c @ RDecimalClamp(_, _) => (rs, i) => { // clamp38: external form
-        val v = rs.getBigDecimal(i)
-        if (v == null) null
-        else BigDecimal(clampDecode(v, f, c.clampedScale).toJavaBigDecimal)
-      }
-      case RChar(_) | RVarchar(_) | RText | RJson | RXml => (rs, i) => rs.getString(i)
-      case RBinary | RFixedBinary(_) | RVarBinary(_) | RUuid | RGeometry => (rs, i) => rs.getBytes(i)
-      case RDate => (rs, i) => rs.getDate(i)
-      case RTime => (rs, i) => {
-        val v = rs.getTime(i)
-        if (v == null) null else v.toLocalTime.toNanoOfDay / 1000L
-      }
-      case RTimestampNtz => (rs, i) => {
-        val v = rs.getTimestamp(i); if (v == null) null else v.toLocalDateTime
-      }
-      case RTimestampTz => (rs, i) => rs.getTimestamp(i)
-      case RArray(elem) =>
-        val conv = externalElem(elem)
-        (rs, i) => {
-          val v = rs.getArray(i)
-          if (v == null) null
-          else sqlArrayElements(v).map(e => if (e == null) null else conv(e)).toSeq
-        }
-      case RStruct(fs) =>
-        val st = StructType(fs.map(f => StructField(f.name, f.tpe.toSpark, f.nullable)))
-        (rs, i) => {
+      case RStruct(_) => requiredType match {
+        case st: StructType => (rs, i) => {
           val v = rs.getString(i)
-          if (v == null) null else JsonStructDecode.parseExternal(v, st)
+          if (v == null) null else JsonStructDecode.parse(v, st)
         }
-      case _ => (rs, i) => rs.getString(i)
-    }
-  }
-
-  /** External (Row-API) element conversion for the Transform path. */
-  private def externalElem(t: RemoteType): Any => Any = {
-    import RemoteType._
-    t match {
-      case RBool => identity
-      case RInt1 => v => v.asInstanceOf[Number].byteValue
-      case RInt2 | RUInt1 => v => v.asInstanceOf[Number].shortValue
-      case RInt4 | RUInt2 => v => v.asInstanceOf[Number].intValue
-      case RInt8 | RUInt4 => v => v.asInstanceOf[Number].longValue
-      case RFloat4 => v => v.asInstanceOf[Number].floatValue
-      case RFloat8 => v => v.asInstanceOf[Number].doubleValue
-      case RDecimal(p, s) if p <= DecimalType.MAX_PRECISION => {
-        case d: java.math.BigDecimal =>
-          BigDecimal(d.setScale(s, java.math.RoundingMode.HALF_UP))
-        case v => BigDecimal(v.toString).setScale(s, BigDecimal.RoundingMode.HALF_UP)
+        case _ => text
       }
-      case RBinary | RFixedBinary(_) | RVarBinary(_) => identity
-      case RDate => identity
-      case _ => v => v.toString
+      case _ => text
     }
   }
 }

@@ -9,7 +9,12 @@ import scala.jdk.CollectionConverters._
   *   url, driver, user, password           — JDBC connection
   *   dbtable | query | command=list_tables — the RemoteSource
   *   dialect                               — override url-derived dialect
-  *   fetchsize                             — reference stream_chunk_size (2048)
+  *   fetchsize                             — reference stream_chunk_size (2048):
+  *                                           rows per remote round trip of
+  *                                           the scan reader, which decodes
+  *                                           every scan, pushed aggregate
+  *                                           and Transform row alike (no
+  *                                           read-path option)
   *   partitioncolumn, lowerbound, upperbound, numpartitions
   *                                         — parallel range scan (§7.4:
   *                                           design N partitions from day 1)
@@ -44,13 +49,6 @@ final case class RemoteOptions(map: Map[String, String]) extends Serializable {
 
   def fetchSize: Int = map.getOrElse("fetchsize", "2048").toInt
   def batchSize: Int = map.getOrElse("batchsize", "1000").toInt
-  /** Columnar (vectorized) read path: decode the JDBC cursor straight
-    * into ColumnarBatch vectors — the reader-side analogue of the
-    * reference's row→Arrow decode (its whole decode layer is columnar).
-    * On by default wherever the projected types support it. */
-  def columnarRead: Boolean = map.getOrElse("columnarread", "true").toBoolean
-  /** Rows per ColumnarBatch on the columnar read path. */
-  def columnarBatchSize: Int = map.getOrElse("columnarbatchsize", "4096").toInt
   def literalInsert: Boolean = map.getOrElse("literalinsert", "false").toBoolean
   /** Remote decimals wider than Decimal128: "string" (default — exact,
     * loses numeric semantics) or "clamp38" (DECIMAL(38, min(s,38)) with

@@ -399,28 +399,46 @@ class RemoteScanBuilder(private var table: RemoteTableImpl)
     case _ => None
   }
 
-  /** Render one aggregate to remote SQL + its Spark result type (the
-    * scan schema must equal Spark's own aggregate output type, so SUM
-    * widens exactly the way Catalyst does). */
-  private def compileAgg(fn: AggregateFunc): Option[(String, DataType)] = fn match {
-    case _: CountStar => Some(("COUNT(1)", LongType))
+  /** A remote column whose values a pushed GROUP BY or MIN/MAX hands
+    * back as one scalar result column: the shared admission rule of
+    * [[compileGroupCol]] and [[compileAgg]]'s MIN/MAX. Arrays, binary,
+    * instants and struct columns stay Spark-side. */
+  private def scalarColumn(
+      e: org.apache.spark.sql.connector.expressions.Expression)
+      : Option[(String, RemoteField)] =
+    aggColumn(e).map(n => (n, table.remoteSchema(n))).filter {
+      case (_, f) => f.tpe.toSpark match {
+        case LongType | IntegerType | ShortType | ByteType | DoubleType |
+             FloatType | StringType | DateType | TimestampNTZType |
+             BooleanType | _: DecimalType => true
+        case _ => false
+      }
+    }
+
+  /** Render one aggregate to remote SQL + the remote type of its result
+    * column, which the scan reader decodes like any scanned column. The
+    * type's Spark form must equal Spark's own aggregate output type, so
+    * SUM widens exactly the way Catalyst does. */
+  private def compileAgg(fn: AggregateFunc): Option[(String, RemoteType)] = fn match {
+    case _: CountStar => Some(("COUNT(1)", RemoteType.RInt8))
     case c: Count if !c.isDistinct =>
-      aggColumn(c.column).map(n => (s"COUNT(${dialect.quote(n)})", LongType))
+      aggColumn(c.column).map(n =>
+        (s"COUNT(${dialect.quote(n)})", RemoteType.RInt8))
     case c: Count if c.isDistinct =>
       // exact remote COUNT(DISTINCT col): complete pushdown only, so the
       // remote engine's distinct set IS the final answer (a partial
       // distinct count cannot be merged)
       aggColumn(c.column).map(n =>
-        (s"COUNT(DISTINCT ${dialect.quote(n)})", LongType))
+        (s"COUNT(DISTINCT ${dialect.quote(n)})", RemoteType.RInt8))
+    // MIN/MAX return the source column's own values, so they decode by
+    // its own remote type (a TIME column reads through getTime)
     case m: Min =>
-      aggColumn(m.column).map { n =>
-        (s"MIN(${dialect.quote(n)})",
-          table.remoteSchema(n).tpe.toSpark)
+      scalarColumn(m.column).map { case (n, f) =>
+        (s"MIN(${dialect.quote(n)})", f.tpe)
       }
     case m: Max =>
-      aggColumn(m.column).map { n =>
-        (s"MAX(${dialect.quote(n)})",
-          table.remoteSchema(n).tpe.toSpark)
+      scalarColumn(m.column).map { case (n, f) =>
+        (s"MAX(${dialect.quote(n)})", f.tpe)
       }
     case s: Sum if !s.isDistinct =>
       import RemoteType._
@@ -459,7 +477,7 @@ class RemoteScanBuilder(private var table: RemoteTableImpl)
                   val rp = dt.precision + 10
                   Some((s"CAST(SUM(CAST($q AS " +
                     s"DECIMAL(${dt.precision},${dt.scale}))) AS " +
-                    s"DECIMAL($rp,${dt.scale}))", DecimalType(rp, dt.scale)))
+                    s"DECIMAL($rp,${dt.scale}))", RDecimal(rp, dt.scale)))
                 }
               }
             case _ => None
@@ -469,12 +487,12 @@ class RemoteScanBuilder(private var table: RemoteTableImpl)
             val q = dialect.quote(n)
             table.remoteSchema(n).tpe match {
               case RInt1 | RInt2 | RInt4 | RInt8 | RUInt1 | RUInt2 | RUInt4 =>
-                Some((s"SUM(CAST($q AS BIGINT))", LongType))
+                Some((s"SUM(CAST($q AS BIGINT))", RInt8))
               case RFloat4 | RFloat8 =>
-                Some((s"SUM(CAST($q AS DOUBLE))", DoubleType))
+                Some((s"SUM(CAST($q AS DOUBLE))", RFloat8))
               case RDecimal(p, sc) if p + 10 <= DecimalType.MAX_PRECISION =>
                 Some((s"CAST(SUM($q) AS DECIMAL(${p + 10},$sc))",
-                  DecimalType(p + 10, sc)))
+                  RDecimal(p + 10, sc)))
               case _ => None
             }
           }
@@ -496,28 +514,19 @@ class RemoteScanBuilder(private var table: RemoteTableImpl)
           case RInt1 | RInt2 | RInt4 | RInt8 | RUInt1 | RUInt2 | RUInt4 =>
             Some((s"CASE WHEN COUNT($q) = 0 THEN NULL ELSE " +
               s"CAST(CAST(SUM(CAST($q AS BIGINT)) AS DOUBLE) / COUNT($q) " +
-              s"AS DOUBLE) END", DoubleType))
+              s"AS DOUBLE) END", RFloat8))
           case _ => None
         }
       }
     case _ => None
   }
 
-  /** A GROUP BY column is pushable when it resolves to a remote column
-    * whose Spark type the agg reader can decode scalar-wise. */
+  /** A GROUP BY column is pushable when it is a [[scalarColumn]]; its
+    * result column is the source field under the name Spark asked for. */
   private def compileGroupCol(
       e: org.apache.spark.sql.connector.expressions.Expression)
-      : Option[(String, StructField)] =
-    aggColumn(e).flatMap { n =>
-      val f = table.remoteSchema(n)
-      f.tpe.toSpark match {
-        case LongType | IntegerType | ShortType | ByteType | DoubleType |
-             FloatType | StringType | DateType | TimestampNTZType |
-             BooleanType | _: DecimalType =>
-          Some((dialect.quote(n), StructField(n, f.tpe.toSpark, f.nullable)))
-        case _ => None // arrays/binary/etc: grouping stays Spark-side
-      }
-    }
+      : Option[(String, RemoteField)] =
+    scalarColumn(e).map { case (n, f) => (dialect.quote(n), f.copy(name = n)) }
 
   override def supportCompletePushDown(aggregation: Aggregation): Boolean = {
     // single-partition scans only: complete pushdown means Spark takes
@@ -536,12 +545,11 @@ class RemoteScanBuilder(private var table: RemoteTableImpl)
     val compiled = aggregation.aggregateExpressions.toSeq.map(compileAgg(_).get)
     // scan output = grouping columns then aggregates, positionally —
     // the DSv2 complete-pushdown contract
-    val schema = StructType(groups.map(_._2) ++
-      compiled.zipWithIndex.map { case ((_, dt), i) =>
-        StructField(s"agg_$i", dt, nullable = true)
-      })
+    val fields = groups.map(_._2) ++ compiled.zipWithIndex.map {
+      case ((_, tpe), i) => RemoteField(s"agg_$i", tpe)
+    }
     agg = Some(PushedAgg(groups.map(_._1) ++ compiled.map(_._1),
-      groups.map(_._1), schema))
+      groups.map(_._1), fields))
     true
   }
 
@@ -649,11 +657,28 @@ class RemoteScanBuilder(private var table: RemoteTableImpl)
 
 /** A pushed-down (complete) aggregate: the rendered SELECT list
   * (grouping columns first, then aggregates), the GROUP BY column list,
-  * and the Spark schema of the result rows. */
+  * and one remote field per result column, which the scan reader
+  * decodes like the columns of a plain scan. */
 final case class PushedAgg(
     select: Seq[String],
     groupBy: Seq[String],
-    schema: StructType)
+    fields: Seq[RemoteField]) {
+  def schema: StructType = RemoteSchema(fields).toSpark
+}
+
+object PushedAgg {
+  /** The remote query of a pushed aggregate: `select` over the filtered
+    * source, grouped by `groupBy`. The scan reader and [[ScanCodec]]'s
+    * replay both render it here, so a replay runs the scan's query. */
+  def sql(dialect: Dialect, source: RemoteSource, filters: Seq[String],
+      select: Seq[String], groupBy: Seq[String]): String = {
+    val from = dialect.rewriteQuery(source, filters, None, None)
+    val groupSql =
+      if (groupBy.isEmpty) "" else groupBy.mkString(" GROUP BY ", ", ", "")
+    s"SELECT ${select.mkString(", ")} " +
+      s"FROM ($from) ${dialect.subqueryAlias}A$groupSql"
+  }
+}
 
 /** Input split: optional extra range predicate for parallel reads,
   * plus any execution-time runtime filters (broadcast-join IN lists).
@@ -899,120 +924,64 @@ class RemoteReaderFactory(
       else new ListTablesReader(opts)
     } else agg match {
       case Some(a) =>
-        new AggPushdownReader(opts, a, filters)
+        new FastRowReader(opts,
+          PushedAgg.sql(opts.dialect, opts.source, filters, a.select, a.groupBy),
+          a.fields, a.schema)
       case None if opts.transformClass.isEmpty =>
-        new FastRowReader(opts, remoteSchema, required, filters, limit,
-          sortSql, offset)
+        val fields = required.fields.toSeq.map(f => remoteSchema(f.name))
+        new FastRowReader(opts,
+          opts.dialect.rewriteQuery(opts.source, filters, limit,
+            Some(fields.map(_.name)), sortSql, offset),
+          fields, required)
       case None =>
+        // the transform may read any raw column (reference
+        // `scan.rs:208-232`), so the remote SELECT keeps them all
+        val raw = new FastRowReader(opts,
+          opts.dialect.rewriteQuery(opts.source, filters, limit, None,
+            sortSql, offset),
+          remoteSchema.fields, remoteSchema.toSpark)
         new TransformRowReader(opts, remoteSchema, transformedSchema,
-          required, filters, limit, sortSql, offset)
+          required, raw)
     }
-  }
-
-  /** Vectorized read path: only the plain-scan shape (no transform, no
-    * agg, no command) with vector-decodable projected types. Aggregate
-    * pushdown returns one row — batching it buys nothing — and the
-    * Transform contract hands user code a row iterator. */
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    opts.columnarRead && !isCommand && agg.isEmpty &&
-      opts.transformClass.isEmpty &&
-      Jdbc.columnarSupported(
-        required.fields.toSeq.map(f => remoteSchema(f.name)))
-
-  override def createColumnarReader(partition: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val part = partition.asInstanceOf[RemotePartition]
-    new ColumnarRemoteReader(opts, remoteSchema, required,
-      pushedSql ++ part.rangePredicate ++ part.runtimeSql,
-      limit, sortSql, offset)
   }
 }
 
-/** Columnar no-transform scan: decode the JDBC cursor straight into
-  * `OnHeapColumnVector`s, `columnarbatchsize` rows per batch. Spark
-  * plans a vectorized `ColumnarToRow` above this scan (the same
-  * machinery the parquet reader uses), so downstream whole-stage
-  * codegen consumes the batch without per-row iterator overhead — the
-  * Spark-side equivalent of the reference decoding rows into Arrow
-  * `RecordBatch`es (`connection/mod.rs` decode layer). */
-class ColumnarRemoteReader(
-    opts: RemoteOptions,
-    remoteSchema: RemoteSchema,
-    required: StructType,
-    filters: Seq[String],
-    limit: Option[Int],
-    sortSql: Seq[String] = Nil,
-    offset: Option[Int] = None)
-  extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-
-  private val requiredFields: Seq[RemoteField] =
-    required.fields.toSeq.map(f => remoteSchema(f.name))
-  private val conn = GraftConnections.open(opts)
-  private val stmt = conn.createStatement()
-  stmt.setFetchSize(opts.fetchSize)
-  private val sql = opts.dialect.rewriteQuery(opts.source, filters, limit,
-    Some(requiredFields.map(_.name)), sortSql, offset)
-  ScanSqlLog.record(sql)
-  private val rs = stmt.executeQuery(sql)
-  private val setters = requiredFields.map(Jdbc.columnarSetter).toArray
-  private val width = requiredFields.length
-  private val capacity = math.max(1, opts.columnarBatchSize)
-  private val vectors = org.apache.spark.sql.execution.vectorized
-    .OnHeapColumnVector.allocateColumns(capacity, required)
-  private val batch = new org.apache.spark.sql.vectorized.ColumnarBatch(
-    vectors.asInstanceOf[Array[org.apache.spark.sql.vectorized.ColumnVector]])
-  private var exhausted = false
-
-  override def next(): Boolean = {
-    if (exhausted) return false
-    var i = 0
-    while (i < width) { vectors(i).reset(); i += 1 }
-    var n = 0
-    while (n < capacity && rs.next()) {
-      var c = 0
-      while (c < width) { setters(c)(rs, c + 1, vectors(c), n); c += 1 }
-      n += 1
-    }
-    if (n < capacity) exhausted = true
-    batch.setNumRows(n)
-    n > 0
-  }
-
-  override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = batch
-
-  override def close(): Unit = {
-    try { batch.close(); rs.close(); stmt.close() }
-    finally GraftConnections.close(conn)
-  }
-}
-
-/** No-transform path: SELECT only the pruned columns, decode straight
-  * to InternalRow (reference O1 + decode-side O2, but with the SELECT
-  * list rewritten as SURVEY §2.1 recommends). */
+/** The connector's scan reader: runs one remote SELECT and decodes each
+  * row straight to an InternalRow through [[Jdbc.catalystGetter]], one
+  * getter per result column (`fields` by position, `schema` giving the
+  * Spark type each column decodes to). Plain scans SELECT only the
+  * pruned columns (reference O1 + decode-side O2, but with the SELECT
+  * list rewritten as SURVEY §2.1 recommends); pushed aggregates read
+  * their group rows; the Transform reads its raw rows through it.
+  *
+  * This is the one copy of the cursor lifecycle: borrow a pooled
+  * connection, create the statement, set the fetch size, log the SQL
+  * to [[ScanSqlLog]], execute; [[close]] releases all three, and a
+  * failed execute releases them before the error leaves. */
 class FastRowReader(
     opts: RemoteOptions,
-    remoteSchema: RemoteSchema,
-    required: StructType,
-    filters: Seq[String],
-    limit: Option[Int],
-    sortSql: Seq[String] = Nil,
-    offset: Option[Int] = None)
+    sql: String,
+    fields: Seq[RemoteField],
+    schema: StructType)
   extends PartitionReader[InternalRow] {
 
-  private val requiredFields: Seq[RemoteField] =
-    required.fields.toSeq.map(f => remoteSchema(f.name))
   private val conn = GraftConnections.open(opts)
-  private val stmt = conn.createStatement()
-  stmt.setFetchSize(opts.fetchSize)
-  private val sql = opts.dialect.rewriteQuery(opts.source, filters, limit,
-    Some(requiredFields.map(_.name)), sortSql, offset)
-  ScanSqlLog.record(sql)
-  private val rs = stmt.executeQuery(sql)
-  // required-typed getters: struct columns decode against the pruned shape
-  private val getters = requiredFields.zip(required.fields).map {
+  private var stmt: java.sql.Statement = _
+  private val rs: java.sql.ResultSet =
+    try {
+      stmt = conn.createStatement()
+      stmt.setFetchSize(opts.fetchSize)
+      ScanSqlLog.record(sql)
+      stmt.executeQuery(sql)
+    } catch {
+      case e: Throwable =>
+        try close() catch { case c: Throwable => e.addSuppressed(c) }
+        throw e
+    }
+  private val getters = fields.zip(schema.fields).map {
     case (rf, sf) => Jdbc.catalystGetter(rf, sf.dataType)
-  }
-  private val width = requiredFields.length
+  }.toArray
+  private val width = getters.length
 
   override def next(): Boolean = rs.next()
 
@@ -1023,56 +992,44 @@ class FastRowReader(
     new GenericInternalRow(arr)
   }
 
-  override def close(): Unit = {
-    try { rs.close(); stmt.close() } finally GraftConnections.close(conn)
-  }
+  override def close(): Unit =
+    try { if (rs != null) rs.close(); if (stmt != null) stmt.close() }
+    finally GraftConnections.close(conn)
 }
 
-/** Transform path: fetch ALL raw columns (the transform may read any of
-  * them — reference `scan.rs:208-232`), apply the user transform on
-  * external rows, then project to the pruned schema and convert to
-  * InternalRow (projection applied after transform,
-  * `transform.rs:143-150`). */
+/** Transform path: the user transform rewrites the raw rows of `raw`
+  * (every remote column), then the output is projected to the pruned
+  * schema and converted to InternalRow (projection applied after
+  * transform, `transform.rs:143-150`). Raw rows reach the transform as
+  * external Rows of the raw Spark schema, converted by Spark's own
+  * [[CatalystTypeConverters]] — the types its `Row` API documents. */
 class TransformRowReader(
     opts: RemoteOptions,
     remoteSchema: RemoteSchema,
     transformedSchema: StructType,
     required: StructType,
-    filters: Seq[String],
-    limit: Option[Int],
-    sortSql: Seq[String] = Nil,
-    offset: Option[Int] = None)
+    raw: FastRowReader)
   extends PartitionReader[InternalRow] {
 
-  private val conn = GraftConnections.open(opts)
-  private val stmt = conn.createStatement()
-  stmt.setFetchSize(opts.fetchSize)
-  private val sql = opts.dialect.rewriteQuery(opts.source, filters, limit, None,
-    sortSql, offset)
-  private val rs = stmt.executeQuery(sql)
-  private val getters = remoteSchema.fields.map(Jdbc.externalGetter)
-  private val rawWidth = remoteSchema.fields.length
   private val rawSchema = remoteSchema.toSpark
+  private val toRow = CatalystTypeConverters.createToScalaConverter(rawSchema)
 
   /** The raw-row iterator handed to the user Transform. `hasNext` must be
     * idempotent (user code may legally call it more than once per `next()` —
     * `isEmpty`, `buffered`, defensive checks), so the underlying side-effecting
-    * `rs.next()` cursor advance is cached behind a one-step lookahead flag. */
+    * cursor advance is cached behind a one-step lookahead flag. */
   private val rawRows: Iterator[org.apache.spark.sql.Row] =
     new Iterator[org.apache.spark.sql.Row] {
       private var advanced = false
       private var hasRow = false
       def hasNext: Boolean = {
-        if (!advanced) { hasRow = rs.next(); advanced = true }
+        if (!advanced) { hasRow = raw.next(); advanced = true }
         hasRow
       }
       def next(): org.apache.spark.sql.Row = {
         if (!hasNext) throw new NoSuchElementException("next on empty remote cursor")
         advanced = false
-        val arr = new Array[Any](rawWidth)
-        var i = 0
-        while (i < rawWidth) { arr(i) = getters(i)(rs, i + 1); i += 1 }
-        org.apache.spark.sql.Row.fromSeq(arr.toIndexedSeq)
+        toRow(raw.get()).asInstanceOf[org.apache.spark.sql.Row]
       }
     }
 
@@ -1092,75 +1049,7 @@ class TransformRowReader(
   override def next(): Boolean =
     if (out.hasNext) { current = out.next(); true } else false
   override def get(): InternalRow = current
-  override def close(): Unit = {
-    try { rs.close(); stmt.close() } finally GraftConnections.close(conn)
-  }
-}
-
-/** Complete aggregate pushdown: the remote `SELECT [g1, g2,] agg1 ...
-  * [GROUP BY g1, g2]` rows ARE the scan output (Spark plans no
-  * re-aggregation) — one row for a global aggregate, one row per group
-  * with GROUP BY. Only group rows cross the wire, never input rows. */
-class AggPushdownReader(
-    opts: RemoteOptions,
-    pushedAgg: PushedAgg,
-    filters: Seq[String])
-  extends PartitionReader[InternalRow] {
-
-  private val schema = pushedAgg.schema
-  private val conn = GraftConnections.open(opts)
-  private val stmt = conn.createStatement()
-  stmt.setFetchSize(opts.fetchSize)
-  private val from = opts.dialect.rewriteQuery(opts.source, filters, None, None)
-  private val groupSql =
-    if (pushedAgg.groupBy.isEmpty) ""
-    else pushedAgg.groupBy.mkString(" GROUP BY ", ", ", "")
-  private val sql = s"SELECT ${pushedAgg.select.mkString(", ")} " +
-    s"FROM ($from) ${opts.dialect.subqueryAlias}A$groupSql"
-  ScanSqlLog.record(sql)
-  private val rs = stmt.executeQuery(sql)
-
-  override def next(): Boolean = rs.next()
-
-  override def get(): InternalRow = {
-    val arr: Array[Any] = schema.fields.zipWithIndex.map { case (f, i) =>
-      f.dataType match {
-        case LongType => val v = rs.getLong(i + 1); if (rs.wasNull()) null else v
-        case IntegerType => val v = rs.getInt(i + 1); if (rs.wasNull()) null else v
-        case ShortType => val v = rs.getShort(i + 1); if (rs.wasNull()) null else v
-        case ByteType => val v = rs.getByte(i + 1); if (rs.wasNull()) null else v
-        case BooleanType =>
-          val v = rs.getBoolean(i + 1); if (rs.wasNull()) null else v
-        case DoubleType => val v = rs.getDouble(i + 1); if (rs.wasNull()) null else v
-        case FloatType => val v = rs.getFloat(i + 1); if (rs.wasNull()) null else v
-        case d: DecimalType =>
-          val v = rs.getBigDecimal(i + 1)
-          if (v == null) null
-          else Decimal(BigDecimal(v.setScale(d.scale, java.math.RoundingMode.HALF_UP)),
-            d.precision, d.scale)
-        case StringType =>
-          val v = rs.getString(i + 1)
-          if (v == null) null else UTF8String.fromString(v)
-        case DateType =>
-          val v = rs.getDate(i + 1)
-          if (v == null) null
-          else org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaDate(v)
-        case TimestampNTZType =>
-          val v = rs.getTimestamp(i + 1)
-          if (v == null) null
-          else org.apache.spark.sql.catalyst.util.DateTimeUtils
-            .localDateTimeToMicros(v.toLocalDateTime)
-        case _ =>
-          val v = rs.getString(i + 1)
-          if (v == null) null else UTF8String.fromString(v)
-      }
-    }
-    new GenericInternalRow(arr)
-  }
-
-  override def close(): Unit = {
-    try { rs.close(); stmt.close() } finally GraftConnections.close(conn)
-  }
+  override def close(): Unit = raw.close()
 }
 
 /** `list_tables` metadata command (reference `ListMdbTables`,

@@ -76,9 +76,9 @@ object ScanCodec {
   }
 
   /** Re-execute a decoded scan: render the SAME remote SQL the
-    * original scan's partition readers would (the agg reader's
-    * subquery shape for pushed aggregates; `rewriteQuery` with the
-    * pruned SELECT list otherwise) and run it through the connector's
+    * original scan's partition readers would ([[PushedAgg.sql]] for
+    * pushed aggregates; `rewriteQuery` with the pruned SELECT list
+    * otherwise) and run it through the connector's
     * `query` source. The result is cast to the encoded schema so the
     * round trip is schema-identical even where remote type inference
     * widens (e.g. COUNT's BIGINT). */
@@ -97,10 +97,6 @@ object ScanCodec {
       st.aggSchemaDdl.getOrElse(st.readSchemaDdl))
     val sql =
       if (st.aggSchemaDdl.isDefined) {
-        val from = dialect.rewriteQuery(src, st.pushedFilters, None, None)
-        val group =
-          if (st.aggGroupBy.isEmpty) ""
-          else st.aggGroupBy.mkString(" GROUP BY ", ", ", "")
         // alias every select item with the encoded result-schema name:
         // the replay reads THROUGH the connector's query source, whose
         // schema inference needs stable column names (a bare COUNT(*)
@@ -108,8 +104,7 @@ object ScanCodec {
         val sel = st.aggSelect.zip(schema.fieldNames).map {
           case (s, n) => s"$s AS ${dialect.quote(n)}"
         }
-        s"SELECT ${sel.mkString(", ")} " +
-          s"FROM ($from) ${dialect.subqueryAlias}A$group"
+        PushedAgg.sql(dialect, src, st.pushedFilters, sel, st.aggGroupBy)
       } else dialect.rewriteQuery(src, st.pushedFilters, st.limit,
         Some(schema.fieldNames.toSeq), st.sortOrder, st.offset)
     var r = spark.read.format("graft-remote")

@@ -21,6 +21,18 @@ import org.apache.spark.sql.types.StructType
   * its field types, so a mismatch fails the first scanned batch loudly
   * rather than corrupting data.
   *
+  * ROW TYPES: the raw rows are external Rows of the raw Spark schema,
+  * decoded by the same getters as a plain scan and converted by Spark's
+  * own `CatalystTypeConverters`, so each value has the type Spark's
+  * `Row` API documents for its column: a DECIMAL arrives as
+  * `java.math.BigDecimal` (`row.getDecimal`), DATE as `java.sql.Date`,
+  * TIMESTAMP_NTZ as `java.time.LocalDateTime`, TIMESTAMP as
+  * `java.sql.Timestamp` (DATE and TIMESTAMP as `java.time.LocalDate` and
+  * `java.time.Instant` under `spark.sql.datetime.java8API.enabled`), an
+  * ARRAY as a `Seq` and a `structcol` column as a `Row`. The types with
+  * no Spark counterpart keep the source's conventions: TIME is a `Long`
+  * of µs since midnight, a DECIMAL wider than 38 digits a `String`.
+  *
   * [[filterRename]] maps a *transformed* column name back to the source
   * column it derives from, letting filters written against transformed
   * names still push down to the remote DB (reference `transform.rs:26-33`,

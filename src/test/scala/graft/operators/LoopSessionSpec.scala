@@ -54,6 +54,25 @@ class LoopSessionSpec extends AnyFunSuite with graft.ResetsSessionConfs {
         maxIter = 60).collect()) === 77)
   }
 
+  test("bpeTrainBatched leaves cached the word table an earlier " +
+      "bpeSegment on the same corpus cached") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val docs = Tables.table(spark, "/root/testdata/sf0.001", "documents")
+    // does a fresh plan over `df` read the cached word table?
+    def readsWords(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.select("*").queryExecution.withCachedData.collect {
+        case r: InMemoryRelation if r.output.exists(_.name == "syms") => r
+      }.nonEmpty
+    CacheRegistry.releaseAll()
+    val seg = LmOps.bpeSegment(docs, "text", 8)
+    seg.collect()
+    assert(readsWords(seg))
+    LmOps.bpeTrainBatched(docs, "text", 8).collect()
+    assert(readsWords(seg), "bpeTrainBatched unpersisted bpeSegment's cache")
+    CacheRegistry.releaseAll()
+    assert(!readsWords(seg))
+  }
+
   test("nonAdaptive and collectNonAdaptive plan AQE-off with the given " +
       "shuffle partitions and write no session conf") {
     import org.apache.spark.sql.functions.col

@@ -178,18 +178,14 @@ class DuckDbSourceSpec extends AnyFunSuite {
         "-99999999999999999999999999999999999999")
       assert(byId(3).intValueExact == 42 && byId(4) == null)
 
-      // overflow is loud, names the column, and suggests the way out —
-      // on BOTH decode paths (columnar default + row reader)
-      Seq("true", "false").foreach { columnar =>
-        val ex = intercept[Exception] {
-          remote("dbtable" -> "HO", "decimalmode" -> "clamp38",
-            "columnarread" -> columnar).collect()
-        }
-        val msg = Iterator.iterate[Throwable](ex)(_.getCause)
-          .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
-        assert(msg.contains("clamp38") && msg.contains("H") &&
-          msg.contains("decimalmode=string"), s"columnar=$columnar: $msg")
+      // overflow is loud, names the column, and suggests the way out
+      val ex = intercept[Exception] {
+        remote("dbtable" -> "HO", "decimalmode" -> "clamp38").collect()
       }
+      val msg = Iterator.iterate[Throwable](ex)(_.getCause)
+        .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+      assert(msg.contains("clamp38") && msg.contains("H") &&
+        msg.contains("decimalmode=string"), msg)
     }
   }
 

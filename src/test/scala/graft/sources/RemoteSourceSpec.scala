@@ -80,6 +80,18 @@ class TimeRenderTransform extends Transform {
     if (timeCols(ctx)(c)) None else Some(c)
 }
 
+/** Reads C_DEC through `Row.getDecimal` and appends it as DEC_SEEN:
+  * Spark's Row API hands a DECIMAL column out as `java.math.BigDecimal`,
+  * so a transform written against that API must see one. */
+class DecimalReadTransform extends Transform {
+  override def transformSchema(schema: StructType): StructType =
+    schema.add("DEC_SEEN", DecimalType(10, 2))
+  override def transform(rows: Iterator[Row], schema: StructType): Iterator[Row] = {
+    val dec = schema.fieldIndex("C_DEC")
+    rows.map(r => Row.fromSeq(r.toSeq :+ r.getDecimal(dec)))
+  }
+}
+
 object DerbyFixture {
   System.setProperty("derby.stream.error.file", "/tmp/derby.log")
   val dbPath = s"/tmp/graft_derby_${System.nanoTime()}"
@@ -248,6 +260,40 @@ class RemoteSourceSpec extends AnyFunSuite {
       .contains("PushedAggregates: true"))
   }
 
+  test("pushed MIN/MAX over TIME decode by the column's remote type") {
+    val all = remote("dbtable" -> "ALL_TYPES")
+    val times = all.select("C_TIME").collect().filterNot(_.isNullAt(0))
+      .map(_.getLong(0))
+    assert(times.nonEmpty)
+    val df = all.agg(min(col("C_TIME")), max(col("C_TIME")))
+    assert(df.queryExecution.executedPlan.toString
+      .contains("PushedAggregates: true"))
+    val row = df.collect().head
+    assert((row.getLong(0), row.getLong(1)) == ((times.min, times.max)))
+  }
+
+  test("MIN over a structcol column stays Spark-side and equals Spark's own") {
+    val table = "STRUCT_MIN"
+    val c = DriverManager.getConnection(DerbyFixture.url)
+    val st = c.createStatement()
+    try st.executeUpdate(s"DROP TABLE $table") catch { case _: Exception => () }
+    st.executeUpdate(s"CREATE TABLE $table (K INT, J VARCHAR(128))")
+    st.executeUpdate(s"""INSERT INTO $table VALUES
+      | (1, '{"a": 3, "s": "x"}'), (2, '{"a": 1, "s": "z"}'),
+      | (3, '{"a": 1, "s": "y"}'), (4, NULL)""".stripMargin)
+    st.close(); c.close()
+    val df = remote("dbtable" -> table, "structcol.J" -> "a INT, s STRING")
+    val agg = df.agg(min(col("J")))
+    assert(agg.queryExecution.executedPlan.toString
+      .contains("PushedAggregates: false"))
+    val read = df.select("J")
+    val local = spark.createDataFrame(
+      spark.sparkContext.parallelize(read.collect().toSeq), read.schema)
+    val want = local.agg(min(col("J"))).collect().head
+    assert(want.getStruct(0) == Row(1, "y"))
+    assert(agg.collect().head == want)
+  }
+
   test("GROUP BY complete aggregate pushdown: remote groups, no Spark agg") {
     val df = remote("dbtable" -> "NATION")
       .groupBy(col("N_REGIONKEY"))
@@ -343,17 +389,15 @@ class RemoteSourceSpec extends AnyFunSuite {
       (r.getInt(1), r.getTimestamp(2).toLocalDateTime, r.getDate(3).toLocalDate)
     }.toSeq
     rs.close(); st.close(); c.close()
-    // both decode paths must agree with the driver value-for-value
-    for (columnar <- Seq("true", "false")) {
-      val got = remote("dbtable" -> table, "columnarread" -> columnar)
-        .orderBy(col("ID")).collect().map { r =>
-          // DateType's external type is java.sql.Date under the default
-          // (non-java8API) setting — normalize to LocalDate
-          (r.getInt(0), r.getAs[java.time.LocalDateTime](1),
-            r.getDate(2).toLocalDate)
-        }.toSeq
-      assert(got == direct, s"columnarread=$columnar: $got vs $direct")
-    }
+    // the scan must agree with the driver value-for-value
+    val got = remote("dbtable" -> table)
+      .orderBy(col("ID")).collect().map { r =>
+        // DateType's external type is java.sql.Date under the default
+        // (non-java8API) setting — normalize to LocalDate
+        (r.getInt(0), r.getAs[java.time.LocalDateTime](1),
+          r.getDate(2).toLocalDate)
+      }.toSeq
+    assert(got == direct, s"$got vs $direct")
   }
 
   test("multi-partition range scan returns the same rows") {
@@ -373,8 +417,12 @@ class RemoteSourceSpec extends AnyFunSuite {
     val r = rows.head
     assert(r.getAs[Int]("C_INT") == 42)
     assert(r.getAs[Long]("C_BIGINT") == 1234567890123L)
+    assert(r.getAs[Short]("C_SMALL") == 7)
+    assert(r.getAs[Double]("C_DOUBLE") == 3.25)
+    assert(r.getAs[Float]("C_REAL") == 1.5f)
     assert(r.getAs[java.math.BigDecimal]("C_DEC")
       .compareTo(new java.math.BigDecimal("12345.67")) == 0)
+    assert(r.getAs[String]("C_CHAR") == "chars".padTo(10, ' '))
     assert(r.getAs[String]("C_VARCHAR") == "varchars")
     assert(r.getAs[String]("C_CLOB") == "a clob value")
     assert(r.getAs[Array[Byte]]("C_BLOB").toSeq == Seq[Byte](1, 2, 3))
@@ -382,7 +430,10 @@ class RemoteSourceSpec extends AnyFunSuite {
     // TIME convention: µs since midnight as Long (SURVEY §1.4)
     assert(r.getAs[Long]("C_TIME") ==
       (10L * 3600 + 30 * 60 + 45) * 1000000L)
+    assert(r.getAs[java.time.LocalDateTime]("C_TS") ==
+      java.time.LocalDateTime.parse("2024-03-15T10:30:45.123456"))
     assert(r.getAs[Boolean]("C_BOOL"))
+    assert(r.length == 14, "every ALL_TYPES column is asserted above")
     val nullRow = rows(1)
     assert((0 until nullRow.length).forall(nullRow.isNullAt))
   }
@@ -600,6 +651,22 @@ class RemoteSourceSpec extends AnyFunSuite {
     assert(pushed.count() == 1)
   }
 
+  test("transform rows follow Spark's Row types: getDecimal reads a decimal") {
+    val df = remote("dbtable" -> "ALL_TYPES",
+      "transformclass" -> "graft.sources.DecimalReadTransform")
+    val seen = df.filter(col("C_INT") === 42).select("DEC_SEEN").collect()
+    assert(seen.map(_.getDecimal(0)).toSeq ==
+      Seq(new java.math.BigDecimal("12345.67")))
+  }
+
+  test("a transform scan logs its remote SQL like a plain scan") {
+    ScanSqlLog.clear()
+    remote("dbtable" -> "NATION",
+      "transformclass" -> "graft.sources.RenameTransform").collect()
+    assert(ScanSqlLog.recent.exists(q =>
+      q.startsWith("SELECT") && q.contains("NATION")), ScanSqlLog.recent)
+  }
+
   test("filter on computed transform column is NOT pushed but still correct") {
     val df = remote("dbtable" -> "NATION",
       "transformclass" -> "graft.sources.RenameTransform")
@@ -651,43 +718,23 @@ class RemoteSourceSpec extends AnyFunSuite {
     assert(scan(nation()).stats.rowCount.isEmpty)
   }
 
-  test("columnar read path is planned (vectorized ColumnarToRow over the scan)") {
-    val plan = remote("dbtable" -> "ALL_TYPES")
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("ColumnarToRow"),
-      s"columnar scan not planned:\n$plan")
-    // and it can be switched off
-    val rowPlan = remote("dbtable" -> "ALL_TYPES", "columnarread" -> "false")
-      .queryExecution.executedPlan.toString
-    assert(!rowPlan.contains("ColumnarToRow"), s"row path expected:\n$rowPlan")
-  }
-
-  test("columnar and row paths return identical rows (incl. all-NULL row)") {
-    val colRows = remote("dbtable" -> "ALL_TYPES", "columnarbatchsize" -> "1")
-      .orderBy(col("C_INT").asc_nulls_last).collect()
-    val rowRows = remote("dbtable" -> "ALL_TYPES", "columnarread" -> "false")
-      .orderBy(col("C_INT").asc_nulls_last).collect()
-    assert(colRows.length == rowRows.length)
-    colRows.zip(rowRows).foreach { case (a, b) => assert(a == b, s"$a != $b") }
-  }
-
-  test("columnar path batches across the batch boundary without row loss") {
-    // NATION through batch size 3 => several batches, last partial; other
-    // suites append to the shared table, so compare against the row path
-    // rather than a fixed count
-    val colAgg = remote("dbtable" -> "NATION", "columnarbatchsize" -> "3")
-      .agg(count(lit(1)), sum(col("N_NATIONKEY"))).collect().head
-    val rowAgg = remote("dbtable" -> "NATION", "columnarread" -> "false")
-      .agg(count(lit(1)), sum(col("N_NATIONKEY"))).collect().head
-    assert(colAgg == rowAgg, s"$colAgg != $rowAgg")
-    assert(colAgg.getLong(0) >= 10)
-  }
-
   test("no connection leaks across scans (reference pool lifecycle test)") {
     remote("dbtable" -> "NATION").count()
     remote("dbtable" -> "NATION").filter(col("N_REGIONKEY") === 0).collect()
     val (opened, closed) = GraftConnections.state
     assert(opened == closed, s"opened=$opened closed=$closed")
+  }
+
+  test("a scan whose remote execute fails returns its connection") {
+    DerbyFixture.init
+    val (opened0, closed0) = GraftConnections.state
+    intercept[java.sql.SQLException] {
+      new FastRowReader(
+        RemoteOptions(Map("url" -> DerbyFixture.url, "dbtable" -> "NATION")),
+        "SELECT NO_SUCH_COLUMN FROM NATION", Nil, new StructType())
+    }
+    val (opened, closed) = GraftConnections.state
+    assert((opened - opened0, closed - closed0) == ((1L, 1L)))
   }
 
   test("a filtered single-table read probes the remote schema once") {

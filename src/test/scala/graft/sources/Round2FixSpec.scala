@@ -4,6 +4,7 @@ import java.lang.reflect.{InvocationHandler, Method, Proxy}
 import java.sql.{DriverManager, ResultSet}
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -93,7 +94,7 @@ class Round2FixSpec extends AnyFunSuite {
     import RemoteType._
     val f = RemoteField("tags", RArray(RText))
     assert(f.tpe.toSpark == ArrayType(StringType, containsNull = true))
-    val got = Jdbc.catalystGetter(f)(
+    val got = Jdbc.catalystGetter(f, f.tpe.toSpark)(
       fakeRs(fakeSqlArray(Array[AnyRef]("a", "b", null))), 1)
     val arr = got.asInstanceOf[ArrayData]
     assert(arr.numElements() == 3)
@@ -115,17 +116,18 @@ class Round2FixSpec extends AnyFunSuite {
             case other => throw new UnsupportedOperationException(other)
           }
       }).asInstanceOf[java.sql.Array]
-    val arr = Jdbc.catalystGetter(f)(fakeRs(prim), 1).asInstanceOf[ArrayData]
+    val arr = Jdbc.catalystGetter(f, f.tpe.toSpark)(fakeRs(prim), 1)
+      .asInstanceOf[ArrayData]
     assert(arr.toIntArray().toSeq == Seq(7, 8, 9))
-    // external (Transform) path sees plain Scala values
-    val ext = Jdbc.externalGetter(f)(fakeRs(prim), 1)
+    // the Transform sees the same value through Spark's Row conversion
+    val ext = CatalystTypeConverters.createToScalaConverter(f.tpe.toSpark)(arr)
     assert(ext == Seq(7, 8, 9))
   }
 
   test("ARRAY decode: null column value decodes to null") {
     import RemoteType._
     val f = RemoteField("tags", RArray(RText))
-    assert(Jdbc.catalystGetter(f)(fakeRs(null), 1) == null)
+    assert(Jdbc.catalystGetter(f, f.tpe.toSpark)(fakeRs(null), 1) == null)
   }
 
   // ---- Literalizer exotic types ---------------------------------------

@@ -20,6 +20,8 @@ import pyarrow.parquet as pq
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 and not sys.argv[1].startswith("--") \
     else "/root/testdata/sf0.01"
 OUT = "/tmp/graft_verify"
+# the checkout this script lives in (tools/..), whichever copy runs it
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
@@ -30,9 +32,13 @@ ONLY = next((a.split("=", 1)[1] for a in sys.argv if a.startswith("--only=")),
 
 def run_verify():
     names = f" {ONLY}" if ONLY else ""
-    subprocess.run(
+    r = subprocess.run(
         ["sbt", "-batch", f'runMain graft.Verify {SF_DIR} {OUT}{names}'],
-        cwd="/root/repo", check=True, capture_output=True, text=True)
+        cwd=REPO, stdout=subprocess.PIPE, stderr=subprocess.STDOUT, text=True)
+    if r.returncode != 0:
+        tail = r.stdout.splitlines()[-60:]
+        print("\n".join(tail), file=sys.stderr)
+        sys.exit(f"graft.Verify failed in {REPO} (exit {r.returncode})")
 
 
 def norm(v):
